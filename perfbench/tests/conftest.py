@@ -1,0 +1,8 @@
+"""Run from the checkout root: python3 -m pytest perfbench/tests -q"""
+
+import sys
+from pathlib import Path
+
+ROOT = str(Path(__file__).resolve().parents[2])
+if ROOT not in sys.path:
+    sys.path.insert(0, ROOT)
