@@ -8,6 +8,7 @@ gives the DuckDB-equivalent SQL for every SQL-expressible one.
 
 from __future__ import annotations
 
+import functools
 import os
 from collections.abc import Callable
 
@@ -73,20 +74,18 @@ def entry(spark: SparkSession) -> DataFrame:
         "repo", "path", "commit", "lang", "content_sha256",
         F.col("content").alias("conclusion"),
     )
-    mentions = kg_pipeline.detect(sectionized, catalog=pat.KEYWORD_PATTERNS)
+    detected = kg_pipeline.detect(sectionized, catalog=pat.KEYWORD_PATTERNS)
+    # the one barrier: canonicalize and materialize_triples both read
+    # the mentions, so detection runs once, here
+    mentions = detected.localCheckpoint()
+    kg_pipeline.release_doc_cache(detected)
     cmap = kg_pipeline.canonicalize(mentions)
     triples = kg_pipeline.materialize_triples(mentions, cmap)
-    out = triples.groupBy("pred").agg(
+    return triples.groupBy("pred").agg(
         F.count("*").alias("n_triples"),
         F.countDistinct("subj").alias("n_subjects"),
         F.countDistinct("obj").alias("n_objects"),
     )
-    # materialize the (tiny) per-pred aggregate so the clustered doc
-    # cache detect() pinned can be released before returning — without
-    # the barrier the cache must survive until the caller's collect
-    out = out.localCheckpoint()
-    kg_pipeline.release_doc_cache(mentions)
-    return out
 
 
 # ---------------------------------------------------------------------------
@@ -94,21 +93,14 @@ def entry(spark: SparkSession) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-# one computation of the mention table per (session, sf_dir): four
-# contract queries (kg_triples, kg_mentions_by_label, kg_pivot_wide,
-# training_records, scores_map_stats) consume the same subplan, so the
-# detect+merge work runs once and is served from the block cache after
-_MENTIONS_CACHE: dict[tuple[int, str], DataFrame] = {}
-
-
+# One computation of the mention table per (session, sf_dir): every
+# contract query over mentions or triples (kg_triples and the graph
+# queries built on it) consumes the same subplan. The cache key is the session object itself — SparkSession hashes by
+# identity, and the cache's strong reference keeps it alive, so no other
+# session can reuse its key. An evicted entry's checkpoint blocks are
+# freed by the ContextCleaner once nothing references the DataFrame.
+@functools.lru_cache(maxsize=2)
 def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
-    cached = _MENTIONS_CACHE.get(key)
-    # identity check: the cached DataFrame pins its owning session (so
-    # its id() cannot be reused while cached), but guard anyway against
-    # a different live session resolving to a stale entry
-    if cached is not None and cached.sparkSession is spark:
-        return cached
     from gliner_transbronchialbiopsy_spark.plans import kg_pipeline
 
     docs = _docs_as_corpus(spark, sf_dir)
@@ -121,53 +113,22 @@ def _kg_mentions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "repo", "path", "commit", "content_sha256",
         F.col("content").alias("conclusion"),
     )
-    # materialize=False: this cache IS the barrier (the eager
-    # localCheckpoint below) — detect()'s internal localCheckpoint
-    # would write the full mention table a second time for a
-    # single-consumer plan
-    mentions = kg_pipeline.detect(
-        sectionized, catalog=pat.KEYWORD_PATTERNS, materialize=False
-    )
-    # prune to what the contract queries read before materializing the
-    # cache (mention_id's per-row sha256 would otherwise be computed and
-    # stored for nothing)
+    mentions = kg_pipeline.detect(sectionized, catalog=pat.KEYWORD_PATTERNS)
+    # prune to what the contract queries read before materializing
+    # (mention_id's per-row sha256 would otherwise be computed and
+    # stored for nothing), then take the one barrier: an EAGER
+    # localCheckpoint materializes the pruned table AND truncates the
+    # lineage, so every consumption query's plan reads Scan ExistingRDD
+    # — no MapInPandas subtree survives downstream (the plan-audit
+    # invariant), and detection never re-runs per consumer
     pruned = mentions.select(
         "repo", "path", "commit", "label", "text", "score",
         "start_idx", "end_idx",
-    )
-    # bounded cache: evict (unpersist) the OLDEST entries — dicts are
-    # insertion-ordered, so the first key is FIFO — so a long-lived
-    # process running many sessions/sf_dirs doesn't pin blocks forever.
-    # A stale SAME-key entry (identity guard rejected it above) is
-    # evicted first: the FIFO loop might pop the other key instead and
-    # the overwrite below would then leak the stale entry's blocks.
-    stale = _MENTIONS_CACHE.pop(key, None)
-    if stale is not None:
-        try:
-            stale.unpersist()
-        except Exception:
-            pass  # owning session may already be stopped
-    while len(_MENTIONS_CACHE) >= 2:
-        oldest = next(iter(_MENTIONS_CACHE))
-        old = _MENTIONS_CACHE.pop(oldest)
-        try:
-            old.unpersist()
-        except Exception:
-            pass  # owning session may already be stopped
-    # EAGER localCheckpoint (not persist+count): one job materializes
-    # the pruned mention table AND truncates the lineage, so every
-    # consumption query's plan reads Scan ExistingRDD — no MapInPandas
-    # subtree survives anywhere downstream (the plan-audit invariant),
-    # and the detection stage can never be silently recomputed by a
-    # cache-evicted consumer. Block cleanup on eviction falls to the
-    # ContextCleaner once the dict drops the reference (unpersist() on
-    # a checkpointed frame is a no-op; the try/except below keeps
-    # working for both shapes).
-    _MENTIONS_CACHE[key] = pruned.localCheckpoint()
+    ).localCheckpoint()
     # the eager checkpoint has run: detect()'s internal clustered doc
     # cache (full conclusion text) is dead weight now — release it
     kg_pipeline.release_doc_cache(mentions)
-    return _MENTIONS_CACHE[key]
+    return pruned
 
 
 def q_kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -545,7 +506,11 @@ def q_lineage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         "repo", "path", "commit", "content_sha256",
         F.col("content").alias("conclusion"),
     )
-    mentions = kg_pipeline.detect(sectionized, catalog=pat.KEYWORD_PATTERNS)
+    detected = kg_pipeline.detect(sectionized, catalog=pat.KEYWORD_PATTERNS)
+    # the one barrier: canonicalize and materialize_triples both read
+    # the mentions, so detection runs once, here
+    mentions = detected.localCheckpoint()
+    kg_pipeline.release_doc_cache(detected)
     cmap = kg_pipeline.canonicalize(mentions)
     triples = kg_pipeline.materialize_triples(mentions, cmap)
     # fixed per-sf_dir workdir, overwritten each call: a mkdtemp here
@@ -560,9 +525,6 @@ def q_lineage_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     workdir = os.path.join(tempfile.gettempdir(), f"kg_lineage_{tag}")
     ckpt = CheckpointManager(workdir)
     ckpt.write("triples", triples, partition_by=("pred",), lineage_key="pred")
-    # the snapshot is on disk: the clustered doc cache detect() pinned
-    # is dead weight for the rest of the contract session — release it
-    kg_pipeline.release_doc_cache(mentions)
     lineage = ckpt.lineage(spark, "triples")
     return lineage.select("pred", F.col("rows").alias("n_rows"))
 

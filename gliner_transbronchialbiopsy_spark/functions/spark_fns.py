@@ -2,12 +2,11 @@
 
 Two tiers, by design:
 - JVM tier: everything expressible with pyspark.sql.functions stays
-  JVM-side (whole-stage codegen, pushdown-friendly). These mirror the
-  reference's regex chain (src/streamlit/app/utils/text_processor.py)
-  step by step.
-- Arrow tier: NFKC normalization and the multi-pattern sectionizer need
-  Python's unicodedata/re; they run as pandas UDFs over Arrow batches
-  (never row-at-a-time Python UDFs).
+  JVM-side (whole-stage codegen, pushdown-friendly). The regex steps
+  mirror the reference's chain (src/streamlit/app/utils/text_processor.py)
+  one step each.
+- Arrow tier: the multi-pattern sectionizer needs Python's re; it runs
+  as a pandas UDF over Arrow batches (never a row-at-a-time Python UDF).
 """
 
 from __future__ import annotations
@@ -17,15 +16,12 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .. import config
 from . import textlib
 
 # --------------------------------------------------------------------------
-# JVM-tier regex chain (reference text_processor.py:109-132, steps 2-6).
-# Step 1 (NFKC) is Python-only; see clean_text_udf for the full chain.
+# JVM-tier regex steps (reference text_processor.py:109-132). The full
+# clean chain, NFKC included, is textlib.clean_text.
 # --------------------------------------------------------------------------
-
-_CHARSET_CLASS = r"[^\w\sÀ-ſàâäéèêëîïôöùûüÿçÀÂÄÉÈÊËÎÏÔÖÙÛÜŸÇ.,;:()\[\]{}\"'-]"
 
 
 def collapse_whitespace(col: Column) -> Column:
@@ -33,35 +29,14 @@ def collapse_whitespace(col: Column) -> Column:
     return F.regexp_replace(col, r"\s+", " ")
 
 
-def strip_special_chars(col: Column) -> Column:
-    """F3: remove chars outside the French-accent-preserving class
-    (text_processor.py:117-121)."""
-    return F.regexp_replace(col, _CHARSET_CLASS, "")
-
-
 def normalize_punct_spacing(col: Column) -> Column:
     """F4: '\\s*([.,;:!?])\\s*' -> '$1 ' (text_processor.py:124)."""
     return F.regexp_replace(col, r"\s*([.,;:!?])\s*", "$1 ")
 
 
-def collapse_periods(col: Column) -> Column:
-    """F5: '\\.{2,}' -> '.' (text_processor.py:127)."""
-    return F.regexp_replace(col, r"\.{2,}", ".")
-
-
 def normalize_dashes(col: Column) -> Column:
     """F6: unicode dash variants -> '-' (text_processor.py:130)."""
     return F.regexp_replace(col, r"[-‐‑‒–—―]+", "-")
-
-
-def clean_text_jvm(col: Column) -> Column:
-    """Steps 2-6 of clean_text as a pure JVM expression chain (no NFKC)."""
-    c = collapse_whitespace(col)
-    c = strip_special_chars(c)
-    c = normalize_punct_spacing(c)
-    c = collapse_periods(c)
-    c = normalize_dashes(c)
-    return F.trim(c)
 
 
 def format_grades_jvm(col: Column) -> Column:
@@ -74,11 +49,6 @@ def format_grades_jvm(col: Column) -> Column:
         c, r"([AaBb])(\d|\+|x|X)\s*-\s*([AaBb])(\d|\+|x|X)", "$1$2 $3$4"
     )
     return c
-
-
-def truncate_chars(col: Column, n: int = config.MAX_SEQUENCE_LENGTH) -> Column:
-    """F10: char truncation (model_handler.py:89-93 quirk preserved)."""
-    return F.substring(col, 1, n)
 
 
 def content_sha256(col: Column) -> Column:
@@ -97,28 +67,10 @@ def doc_id(repo: Column, path: Column, commit: Column) -> Column:
 
 
 @F.pandas_udf(T.StringType())
-def nfkc_udf(s: pd.Series) -> pd.Series:
-    """F1: unicode NFKC (text_processor.py:111) — no Spark builtin."""
-    return s.str.normalize("NFKC")
-
-
-@F.pandas_udf(T.StringType())
-def clean_text_udf(s: pd.Series) -> pd.Series:
-    """Full clean_text chain incl. NFKC, char-exact with textlib.clean_text."""
-    return s.map(lambda t: textlib.clean_text(t) if t is not None else None)
-
-
-@F.pandas_udf(T.StringType())
 def extract_conclusion_udf(s: pd.Series) -> pd.Series:
     """F8+F9 sectionizer (text_processor.py:138-216); returns NULL when
     no conclusion/biopsy section is found."""
     return s.map(textlib.extract_conclusion)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_udf(s: pd.Series) -> pd.Series:
-    """F11 word+punct tokenizer (json_convertissor.py:7-11)."""
-    return s.map(lambda t: textlib.tokenize(t) if t is not None else None)
 
 
 def highlight_mentions(text_col: Column, surface_col: Column, label_col: Column) -> Column:

@@ -65,9 +65,16 @@ def detect(
     detector=None,
     detector_overlaps: bool | None = None,
     docs_clustered: bool = False,
-    materialize: bool = True,
 ) -> DataFrame:
     """Stage 2: dedup-by-content -> detect -> [overlap-merge] -> fan out.
+
+    Returns a LAZY plan: on the catalog path detection (a Python
+    mapInPandas stage) runs each time the result is executed. The
+    caller installs the one barrier its use needs — a stage snapshot
+    (detect_checkpointed) or an eager localCheckpoint when it reads the
+    mentions several times — and then calls release_doc_cache(result).
+    (The overlap merge of the detector path cuts its own input, which
+    it reads three times; see merge.merge_overlaps.)
 
     Both detection AND the overlap merge run at distinct-content
     granularity (overlaps are a pure function of the text, so merging
@@ -168,20 +175,10 @@ def detect(
             # per mention for a dropped column
             emit_mention_id=False,
         )
-    # materialization barrier: downstream consumers (canonicalize's edge
-    # + node subtrees, materialize_triples' probe side) reference this
-    # plan multiple times; without a cut the detection UDF re-executes
-    # per consumer (merge_overlaps' materialize=True used to provide
-    # this barrier — skipping the merge must not lose it).
-    # materialize=False is for SINGLE-consumer callers that install
-    # their own barrier right after (e.g. the contract queries'
-    # mention cache: persist + count) — for them the localCheckpoint
-    # here would write the full mention table once only to have the
-    # caller's persist materialize it a second time.
     merged = (
         merge.merge_overlaps(found, group_cols=("sha_key", "label"))
         if detector_overlaps
-        else (found.localCheckpoint() if materialize else found)
+        else found
     )
     fanned = hashed.select(*DOC_COLS, "content_sha256").join(
         merged, hashed["content_sha256"] == merged["sha_key"], "inner"
@@ -203,7 +200,7 @@ def detect(
     )
     # hand the internal doc cache to the caller for release: once the
     # caller has MATERIALIZED this result (stage snapshot / its own
-    # persist+count), the clustered doc table is dead weight in block
+    # localCheckpoint), the clustered doc table is dead weight in block
     # storage — release_doc_cache(out) frees it (recompute-safe: an
     # unpersisted cache just recomputes if the plan ever re-executes)
     out._kg_doc_cache = doc_cache
@@ -213,7 +210,8 @@ def detect(
 def release_doc_cache(mentions: DataFrame) -> None:
     """Unpersist the clustered document cache detect() attached to its
     result. Call AFTER materializing the mentions (checkpoint write or
-    persist+action) — before that, releasing just forces a recompute."""
+    eager localCheckpoint) — before that, releasing just forces a
+    recompute."""
     cache = getattr(mentions, "_kg_doc_cache", None)
     if cache is not None:
         try:
@@ -336,32 +334,58 @@ def detect_checkpointed(
     spark: SparkSession,
     sectionized: DataFrame,
     *,
-    stage: str = "mentions",
+    shards: int = 0,
     variant: str | None = None,
     force: bool = False,
     **detect_kwargs,
 ) -> DataFrame:
-    """get_or_compute the detection stage AND release detect()'s
-    internal clustered doc cache once the snapshot is materialized (or
+    """get_or_compute the "mentions" stage AND release detect()'s
+    internal clustered doc cache once the snapshot is written (or
     reused). This is the one sanctioned way to checkpoint detection:
-    the release discipline lives here instead of being re-implemented
-    (or forgotten — a forgotten release pins a corpus-sized cache in
-    block storage) at every call site."""
+    the parquet write is the lazy detect() plan's only barrier, and the
+    release discipline lives here instead of being re-implemented (or
+    forgotten — a forgotten release pins a corpus-sized cache in block
+    storage) at every call site.
+
+    shards=K runs detection as K independently-committed sub-jobs
+    sharded by pmod(xxhash64(content_sha256), K)
+    (checkpoint.get_or_compute_sharded): a killed run resumes at the
+    first incomplete shard instead of redoing the whole stage — the
+    north rule's stage-PARTITION resume granularity, and the knob that
+    matters when one detection pass is hours long at 10^12 files.
+    Sharding by content sha keeps dedup-before-detect exact (each
+    distinct content lives in exactly one shard), so mentions are
+    byte-identical to the unsharded stage for any K. A filter preserves
+    the scan's partitioning, so a bucketed input keeps its
+    zero-doc-side-shuffle guarantee per shard."""
     captured: list[DataFrame] = []
 
-    def _compute() -> DataFrame:
-        df = detect(sectionized, **detect_kwargs)
-        captured.append(df)
-        return df
+    def _compute(k: int | None = None) -> DataFrame:
+        # the previous shard's snapshot is committed by the time the
+        # next compute starts — release its doc cache NOW so at most one
+        # shard's clustered subset is pinned at a time
+        while captured:
+            release_doc_cache(captured.pop())
+        subset = sectionized if k is None else sectionized.filter(
+            F.pmod(F.xxhash64("content_sha256"), F.lit(shards)) == k
+        )
+        captured.append(detect(subset, **detect_kwargs))
+        return captured[-1]
 
-    mentions = ckpt.get_or_compute(
-        spark, stage, _compute, force=force, variant=variant
-    )
-    # snapshot written (or reused): the clustered doc cache is dead
-    # weight in block storage from here on
-    for df in captured:
-        release_doc_cache(df)
-    return mentions
+    try:
+        if shards:
+            return ckpt.get_or_compute_sharded(
+                spark, "mentions", _compute, shards,
+                variant=variant, force=force,
+            )
+        return ckpt.get_or_compute(
+            spark, "mentions", _compute, force=force, variant=variant
+        )
+    finally:
+        # normal path: the last snapshot is written (or reused), so the
+        # doc cache is dead weight; failure path: frees the one in flight
+        while captured:
+            release_doc_cache(captured.pop())
 
 
 def run_pipeline(
@@ -381,15 +405,8 @@ def run_pipeline(
     carry a detector variant tag so a resume with a DIFFERENT detector
     (or threshold) recomputes instead of serving a stale snapshot.
 
-    detect_shards=K runs detection as K independently-committed
-    sub-jobs sharded by pmod(xxhash64(content_sha256), K)
-    (checkpoint.get_or_compute_sharded): a killed run resumes at the
-    first incomplete shard instead of redoing the whole stage — the
-    north rule's stage-PARTITION resume granularity, and the knob that
-    matters when one detection pass is hours long at 10^12 files.
-    Sharding by content sha keeps dedup-before-detect exact (each
-    distinct content lives in exactly one shard), so mentions are
-    byte-identical to the unsharded stage for any K.
+    detect_shards=K commits detection as K content-sha shards (see
+    detect_checkpointed).
 
     bucket_docs=N writes the sectionized snapshot bucketed by
     content_sha256 into N buckets (checkpoint.write bucket_by): the
@@ -409,48 +426,13 @@ def run_pipeline(
         bucket_by=("content_sha256", bucket_docs) if bucket_docs else None,
     )
     docs_clustered = ckpt.bucket_spec("sectionized") is not None
-    if detect_shards:
-        captured: list[DataFrame] = []
-
-        def _shard(k: int) -> DataFrame:
-            # the previous shard's snapshot is committed by the time the
-            # next compute starts — release its doc cache NOW so at most
-            # one shard's clustered subset is pinned at a time (the
-            # whole point of sharding an hours-long stage)
-            while len(captured) > 0:
-                release_doc_cache(captured.pop())
-            subset = sectionized.filter(
-                F.pmod(F.xxhash64("content_sha256"), F.lit(detect_shards))
-                == k
-            )
-            # a filter preserves the scan's partitioning, so a bucketed
-            # sectionized snapshot keeps its zero-doc-side-shuffle
-            # guarantee per shard
-            df = detect(
-                subset, catalog=catalog, threshold=threshold,
-                partitions=None if docs_clustered else partitions,
-                detector=detector, docs_clustered=docs_clustered,
-            )
-            captured.append(df)
-            return df
-
-        try:
-            mentions = ckpt.get_or_compute_sharded(
-                spark, "mentions", _shard, detect_shards,
-                variant=det_variant, force=force,
-            )
-        finally:
-            # normal path: releases the last shard's cache; failure
-            # path: releases whatever shard was in flight
-            while len(captured) > 0:
-                release_doc_cache(captured.pop())
-    else:
-        mentions = detect_checkpointed(
-            ckpt, spark, sectionized, variant=det_variant, force=force,
-            catalog=catalog, threshold=threshold,
-            partitions=None if docs_clustered else partitions,
-            detector=detector, docs_clustered=docs_clustered,
-        )
+    mentions = detect_checkpointed(
+        ckpt, spark, sectionized, shards=detect_shards,
+        variant=det_variant, force=force,
+        catalog=catalog, threshold=threshold,
+        partitions=None if docs_clustered else partitions,
+        detector=detector, docs_clustered=docs_clustered,
+    )
     cmap = ckpt.get_or_compute(
         spark, "entities", lambda: canonicalize(mentions), force=force,
         variant=det_variant,

@@ -15,6 +15,7 @@ stages + a handful of wide shuffles; see SURVEY.md §4):
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark.sql import SparkSession
 
@@ -75,7 +76,9 @@ def get_spark(
     return spark
 
 
-_WARMED: set[int] = set()
+# the worker pool belongs to the SparkContext, so sessions sharing one
+# context warm it once; weak references let a stopped context go
+_WARMED: weakref.WeakSet = weakref.WeakSet()
 
 
 def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
@@ -91,10 +94,10 @@ def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
     (e.g. pure-JVM batch jobs that never cross the Python boundary)."""
     if os.environ.get("SPARK_GRAFT_NO_WORKER_WARMUP"):
         return
-    key = id(spark)
-    if key in _WARMED:
+    sc = spark.sparkContext
+    if sc in _WARMED:
         return
-    _WARMED.add(key)
+    _WARMED.add(sc)
 
     def _touch(batches):
         import numpy  # noqa: F401 — imported for side effect (cache)

@@ -35,13 +35,13 @@ AUDIT = {
     # SortAggregate (struct agg buffers defeat HashAggregate) — no win
     # on either axis, so the window row_number form stays
     "last_writer_wins": ("Window", "WindowGroupLimit", "!InPandas"),
-    # detection runs upstream behind the mention cache's EAGER
-    # localCheckpoint barrier (the UDF executes once, not per
-    # consumer), so the visible consumption plan is a pure scan of the
-    # checkpointed mention RDD: no Python node, no join, no exchange
-    # (r06 — previously the fan-out join was nested inside the plan;
-    # the full detect pipeline shape is still audited fresh via
-    # lineage_counts)
+    # detection runs upstream behind the mention store's one EAGER
+    # localCheckpoint barrier (the UDF executes once per session and
+    # sf_dir, not per consumer), so the visible consumption plan is a
+    # pure scan of the checkpointed mention RDD: no Python node, no
+    # join, no exchange. detect() itself returns a lazy plan (one
+    # MapInPandas, no Scan ExistingRDD), pinned by
+    # tests/test_mention_store.py
     "kg_triples": ("Scan ExistingRDD", "!InPandas", "!Exchange"),
     "text_quality": ("!InPandas",),  # regex/count features stay JVM
     "sim_topk_cosine": ("TakeOrderedAndProject", "!InPandas"),  # no full sort

@@ -192,46 +192,12 @@ def main() -> None:
             sectionized = spark.table(tbl)
             docs_clustered = True
 
-        if args.detect_shards:
-            # stage-partition resume for the skip-sectionize path too:
-            # same shard-by-content-sha contract as run_pipeline (a
-            # filter preserves the bucketed scan's clustering, so
-            # docs_clustered carries through per shard)
-            captured = []
-
-            def _shard(k):
-                while captured:
-                    kg_pipeline.release_doc_cache(captured.pop())
-                subset = sectionized.filter(
-                    F.pmod(
-                        F.xxhash64("content_sha256"),
-                        F.lit(args.detect_shards),
-                    )
-                    == k
-                )
-                df = kg_pipeline.detect(
-                    subset, catalog=catalog,
-                    partitions=None if docs_clustered else args.cpus * 2,
-                    detector=detector, docs_clustered=docs_clustered,
-                )
-                captured.append(df)
-                return df
-
-            try:
-                mentions = ckpt.get_or_compute_sharded(
-                    spark, "mentions", _shard, args.detect_shards,
-                    variant=variant,
-                )
-            finally:
-                while captured:
-                    kg_pipeline.release_doc_cache(captured.pop())
-        else:
-            mentions = kg_pipeline.detect_checkpointed(
-                ckpt, spark, sectionized, variant=variant,
-                catalog=catalog,
-                partitions=None if docs_clustered else args.cpus * 2,
-                detector=detector, docs_clustered=docs_clustered,
-            )
+        mentions = kg_pipeline.detect_checkpointed(
+            ckpt, spark, sectionized, shards=args.detect_shards,
+            variant=variant, catalog=catalog,
+            partitions=None if docs_clustered else args.cpus * 2,
+            detector=detector, docs_clustered=docs_clustered,
+        )
         if docs_clustered:
             # the bucketed layout existed only to feed detection; the
             # mentions snapshot is written, so drop the staging table —
