@@ -1,20 +1,21 @@
 """Stage 3 — canonicalization via connected components (J5).
 
-Alternating large-star/small-star iterative joins (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14 — public
-algorithm) with a driver-side convergence loop. Deterministic canonical
-ID election: every member adopts the component's minimum node id
-(SURVEY.md §2.5 J5); node ids are stable strings end to end (min is
-lexicographic), matching the driver union-find's election exactly.
+One bounded read of the edge table picks the path: a driver union-find
+over the rows it returned (at most driver_cutoff edges), or alternating
+large-star/small-star iterative joins (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC'14 — public algorithm) with a
+driver-side convergence loop. Deterministic canonical ID election: every
+member adopts the component's minimum node id (SURVEY.md §2.5 J5); node
+ids are stable strings end to end (min is lexicographic) on both paths.
 
-Scale notes: each round is a large-star then a small-star pass — plain
-groupBy(min) + equi-join shapes over string node ids (never a
-collect_list of a neighborhood, so a giant star costs one aggregate
-row); lineage is broken every round with localCheckpoint so the plan
-depth stays O(1); convergence is detected by an order-insensitive
-(count, bit_xor-of-hashes) fingerprint of the edge set reaching a
-fixed point, and the operator RAISES if the iteration budget runs out
-rather than returning a partial component map."""
+Star-path scale notes: each round is a large-star then a small-star
+pass — plain groupBy(min) + equi-join shapes over string node ids
+(never a collect_list of a neighborhood, so a giant star costs one
+aggregate row); lineage is broken every round with localCheckpoint so
+the plan depth stays O(1); convergence is detected by an
+order-insensitive (count, bit_xor-of-hashes) fingerprint of the edge
+set reaching a fixed point, and the operator RAISES if the iteration
+budget runs out rather than returning a partial component map."""
 
 from __future__ import annotations
 
@@ -22,39 +23,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .loops import loop_ckpt
-
-
-def connected_components_driver(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Union-find on the driver for SMALL edge sets (collect + path
-    compression + parallelize back). The similarity graph between
-    distinct entity SURFACES is bounded by the surface vocabulary, not
-    the corpus size, so even at 10^12 documents it typically fits in
-    driver memory — the big mention table never leaves the executors.
-    Used automatically by connected_components below the size cutoff."""
-    rows = edges.select(src, dst).collect()
-    parent: dict[str, str] = {}
-
-    def find(x: str) -> str:
-        root = x
-        while parent.get(root, root) != root:
-            root = parent[root]
-        while parent.get(x, x) != x:  # path compression
-            parent[x], x = root, parent[x]
-        return root
-
-    for r in rows:
-        a, b = find(r[0]), find(r[1])
-        if a != b:
-            # deterministic: smaller string becomes the root
-            lo, hi = (a, b) if a < b else (b, a)
-            parent[hi] = lo
-    nodes = {n for r in rows for n in (r[0], r[1])}
-    out = [(n, find(n)) for n in sorted(nodes)]
-    return edges.sparkSession.createDataFrame(
-        out, "node string, component string"
-    )
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -127,13 +95,14 @@ def connected_components(
     """edges(src, dst) [string ids] -> (node, component) where component
     is the lexicographic minimum string id in the node's component.
 
-    Hybrid strategy: below driver_cutoff edges, a driver union-find is
-    strictly faster (the iterative-join loop pays ~4 Spark jobs per
-    iteration); above it, alternating large-star/small-star rounds
-    (Kiveris et al., SoCC'14) which converge in O(log n) rounds even on
-    chain/path-shaped components — unlike plain neighbor-min
-    propagation, whose O(diameter) rounds silently truncate on long
-    chains. Both paths elect the same canonical minimum.
+    Hybrid strategy, decided by ONE read of at most driver_cutoff + 1
+    edges: if it returns at most driver_cutoff, a driver union-find runs
+    over those rows (the iterative-join loop pays ~4 Spark jobs per
+    iteration); otherwise alternating large-star/small-star rounds
+    (Kiveris et al., SoCC'14) re-read the edges and converge in O(log n)
+    rounds even on chain/path-shaped components — unlike plain
+    neighbor-min propagation, whose O(diameter) rounds silently truncate
+    on long chains. Both paths elect the same canonical minimum.
 
     max_iterations=None (the default) derives the budget from the
     symmetric edge count (iteration_budget_for — ~2*log2(n)+4, floor
@@ -141,8 +110,32 @@ def connected_components(
     constant. Raises RuntimeError if the budget is exhausted before the
     edge set reaches its star-forest fixed point (never returns a
     silently wrong partial answer)."""
-    if driver_cutoff and edges.limit(driver_cutoff + 1).count() <= driver_cutoff:
-        return connected_components_driver(edges, src, dst)
+    rows = edges.select(src, dst).limit(driver_cutoff + 1).collect()
+    if len(rows) <= driver_cutoff:
+        # driver union-find with path compression: the similarity graph
+        # between distinct entity SURFACES is bounded by the surface
+        # vocabulary, not the corpus size, so the big mention table
+        # never leaves the executors
+        parent: dict[str, str] = {}
+
+        def find(x: str) -> str:
+            root = x
+            while parent.get(root, root) != root:
+                root = parent[root]
+            while parent.get(x, x) != x:  # path compression
+                parent[x], x = root, parent[x]
+            return root
+
+        for a, b in rows:
+            a, b = find(a), find(b)
+            if a != b:
+                # deterministic: smaller string becomes the root
+                lo, hi = (a, b) if a < b else (b, a)
+                parent[hi] = lo
+        nodes = sorted({n for r in rows for n in r})
+        return edges.sparkSession.createDataFrame(
+            [(n, find(n)) for n in nodes], "node string, component string"
+        )
     sym = (
         edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
         .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))

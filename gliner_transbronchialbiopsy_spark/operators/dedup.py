@@ -427,8 +427,7 @@ def embedding_near_duplicates(
     # referenced three times below (bucket census + both self-join
     # sides) — without a cut each reference recomputes n_planes x dim
     # sign hashes and the norm fold per vector (the same
-    # census+two-sides shape link_surfaces measured at >8x wall when
-    # left uncut)
+    # census+two-sides shape link_surfaces cuts after its signatures)
     bucketed = df.select(
         F.col(id_col), F.col(vec_col), sig.alias("bucket"), norm.alias("_norm")
     ).localCheckpoint()

@@ -640,28 +640,21 @@ def link_surfaces(
     shingle_n: int = 3,
     jaccard_threshold: float = 0.7,
     max_bucket_size: int | None = 64,
-    materialize: bool = True,
 ) -> DataFrame:
     """End-to-end blocking+verification: mentions -> similarity edges
     (key_cols, text_a, text_b, jaccard).
 
-    Stage boundaries are materialized (localCheckpoint) by default: the
-    candidate join references the signature subtree three times (bucket
-    census + both join sides), so a fused lineage recomputes the shingle
-    explode + 32-agg shuffle repeatedly and the optimizer chokes on the
-    duplicated expression trees (measured: >8x wall). Same rationale as
-    the per-iteration checkpoint in components.py; on a cluster these
-    become real checkpoint/Iceberg stage tables (sources/checkpoint.py)."""
+    One barrier: the signature table is materialized because the
+    candidate join reads it three times (bucket census + both join
+    sides), and without the cut each read re-runs the distinct-surface
+    shuffle and the num_hashes-lane signature projection. The candidate
+    pairs and the edges stay lazy: each caller reads them once."""
     sigs = minhash_signatures(
         mentions, text_col, key_cols, num_hashes=num_hashes, shingle_n=shingle_n
-    )
-    if materialize:
-        sigs = sigs.localCheckpoint()
+    ).localCheckpoint()
     pairs = lsh_candidate_pairs(
         sigs, text_col, key_cols, bands=bands, max_bucket_size=max_bucket_size
     )
-    if materialize:
-        pairs = pairs.localCheckpoint()
     return verified_edges(
         pairs, key_cols, shingle_n=shingle_n, jaccard_threshold=jaccard_threshold
     )

@@ -204,8 +204,9 @@ def near_dup_losers(
 
     Scale shape: inherits the LSH stage's guarantees (banded equi-join
     on sha gids, 64-row hot-bucket cap, text never travels after the
-    signature stage); the component loop is the star-contraction
-    iteration with its driver union-find shortcut below 1M edges.
+    signature stage); the component stage is one bounded read of the
+    pairs into a driver union-find, or the star-contraction iteration
+    above 1M edges.
     portable_hash=True makes the whole chain DuckDB-restatable for the
     curation contract oracles (recursive min-label CTE on the SQL side).
     """
@@ -214,14 +215,9 @@ def near_dup_losers(
         shingle_n=shingle_n, jaccard_threshold=jaccard_threshold,
         portable_hash=portable_hash,
     )
-    # materialize the (tiny) edge set once: the component loop reads it
-    # 2-3 times (edge count for the union-find cutoff, then the collect
-    # or the star-contraction iterations) and each read would otherwise
-    # recompute the banded candidate join + estimate joins from the
-    # signature checkpoint
-    edges = pairs.select(
-        F.col("id_a").alias("src"), F.col("id_b").alias("dst")
-    ).localCheckpoint()
+    # the (tiny) edge set stays lazy: the component stage reads it once
+    # (one bounded collect for the driver union-find)
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     nodes = survivors.select(F.col(id_col).cast("string").alias("node"))
     cmap = components.canonical_map(edges, nodes)
     return cmap.filter(F.col("node") != F.col("canonical")).select(

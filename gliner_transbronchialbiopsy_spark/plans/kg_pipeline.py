@@ -246,18 +246,12 @@ def canonicalize(mentions: DataFrame) -> DataFrame:
     the lexicographic-minimum surface, as before."""
     edges = linking.link_surfaces(
         mentions, text_col="text", key_cols=("label",)
-    ).localCheckpoint()
-    nodes = mentions.select(_node_id("label", "text").alias("node")).distinct()
-    if edges.isEmpty():
-        # common fast path (no near-duplicate surfaces): identity map,
-        # skip the CC driver loop entirely
-        cmap = nodes.select("node", F.col("node").alias("canonical"))
-    else:
-        e = edges.select(
-            _node_id("label", "text_a").alias("src"),
-            _node_id("label", "text_b").alias("dst"),
-        )
-        cmap = components.canonical_map(e, nodes)
+    ).select(
+        _node_id("label", "text_a").alias("src"),
+        _node_id("label", "text_b").alias("dst"),
+    )
+    nodes = mentions.select(_node_id("label", "text").alias("node"))
+    cmap = components.canonical_map(edges, nodes)
     parsed = cmap.select(
         F.from_json("node", _NODE_SCHEMA).alias("n"),
         F.from_json("canonical", _NODE_SCHEMA).alias("c"),
@@ -433,17 +427,31 @@ def run_pipeline(
         partitions=None if docs_clustered else partitions,
         detector=detector, docs_clustered=docs_clustered,
     )
+    return entities_and_triples(
+        ckpt, spark, mentions, variant=det_variant, force=force
+    )
+
+
+def entities_and_triples(
+    ckpt: CheckpointManager,
+    spark: SparkSession,
+    mentions: DataFrame,
+    variant: str,
+    force: bool = False,
+) -> DataFrame:
+    """Stages 3-4 over the committed mention table: the `entities`
+    snapshot (canonicalize), then the pred-partitioned `triples`
+    snapshot with per-pred lineage. Returns the triples read back."""
     cmap = ckpt.get_or_compute(
         spark, "entities", lambda: canonicalize(mentions), force=force,
-        variant=det_variant,
+        variant=variant,
     )
-    triples = ckpt.get_or_compute(
+    return ckpt.get_or_compute(
         spark,
         "triples",
         lambda: materialize_triples(mentions, cmap),
         partition_by=("pred",),
         lineage_key="pred",
         force=force,
-        variant=det_variant,
+        variant=variant,
     )
-    return triples

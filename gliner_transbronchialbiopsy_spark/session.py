@@ -40,6 +40,18 @@ def _default_local_dir() -> str:
     return "/tmp"
 
 
+def _driver_memory() -> str:
+    """SPARK_GRAFT_DRIVER_MEM, else half the host's physical memory,
+    capped at 48g. A heap near the host's size grows without GC
+    pressure, and the ContextCleaner, which frees unreferenced
+    checkpoint and shuffle blocks, runs only after a JVM GC."""
+    override = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if override:
+        return override
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{min(phys // 2, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "gliner_tbb_spark",
     cpus: int | None = None,
@@ -63,7 +75,7 @@ def get_spark(
         # first stage is an expensive per-row UDF
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.local.dir", _default_local_dir())
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")

@@ -6,10 +6,11 @@ import pytest
 
 from gliner_transbronchialbiopsy_spark.session import get_spark
 
-# get_spark's 48g default heap lets the suite's one long-lived JVM (and
-# the job subprocesses the tests start, which inherit this) grow past a
-# 16 GB host's memory before a GC — or the ContextCleaner that frees
-# unreferenced checkpoint blocks — ever runs; the test tables are small
+# get_spark's default heap is half the host's memory: the suite's one
+# long-lived JVM plus the job subprocesses the tests start (which
+# inherit this) could together outgrow the host before a GC — or the
+# ContextCleaner that frees unreferenced checkpoint blocks — ever runs;
+# the test tables are small
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "6g")
 
 

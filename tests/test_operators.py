@@ -281,9 +281,28 @@ def test_cc_distributed_matches_driver_union_find(spark):
     }
     drv = {
         r["node"]: r["component"]
-        for r in components.connected_components_driver(edf).collect()
+        for r in components.connected_components(edf).collect()
     }
     assert dist == drv
+
+
+def test_cc_reads_small_edge_set_once(spark):
+    """Below the cutoff the path decision and the union-find share ONE
+    bounded read of the edges: one Spark job over a one-partition input
+    (a count followed by a collect would run two)."""
+    edf = spark.range(0, 40, numPartitions=1).select(
+        F.format_string("n%02d", F.col("id")).alias("src"),
+        F.format_string("n%02d", F.col("id") - F.col("id") % 4).alias("dst"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("cc_one_read", "connected_components job count")
+    try:
+        comp = components.connected_components(edf, driver_cutoff=100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("cc_one_read")) == 1
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    assert got == {f"n{i:02d}": f"n{i - i % 4:02d}" for i in range(40)}
 
 
 def test_cc_raises_on_exhausted_iterations(spark):

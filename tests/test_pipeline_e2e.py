@@ -434,6 +434,28 @@ def test_canonicalize_hostile_surface_bytes(spark):
     assert rows[plain]["canonical_text"] == plain
 
 
+def test_canonicalize_without_near_duplicates_is_identity(spark):
+    """No similarity edges at all: the union-find over zero rows leaves
+    every distinct (label, text) as its own canonical surface, one row
+    each, however often it repeats and whichever labels share a text."""
+    from gliner_transbronchialbiopsy_spark.plans import kg_pipeline
+
+    surfaces = [
+        ("disease", "adenocarcinoma"),
+        ("disease", "sarcoidosis"),
+        ("anatomy", "right lower lobe"),
+        ("anatomy", "adenocarcinoma"),
+        ("procedure", "bronchoalveolar lavage"),
+    ]
+    mentions = spark.createDataFrame(
+        surfaces + surfaces[:2], "label string, text string"
+    )
+    rows = kg_pipeline.canonicalize(mentions).collect()
+    assert sorted(
+        (r["label"], r["text"], r["canonical_text"]) for r in rows
+    ) == sorted((label, text, text) for label, text in surfaces)
+
+
 def test_consumption_layer_coherence(pipeline_out):
     """The KG consumption layer, end-to-end on REAL pipeline triples:
     BGP / MINUS partition the doc set, the rule engine's symmetric

@@ -32,3 +32,20 @@ def test_sessions_sharing_a_context_warm_up_once(monkeypatch):
     other = _StubSession(_Context())
     session._warm_python_workers(other, 2)
     assert other.warmups == 1
+
+
+def test_driver_memory_is_half_the_host_capped_at_48g(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    page = 4096
+
+    def host(gib):
+        sizes = {"SC_PHYS_PAGES": (gib << 30) // page, "SC_PAGE_SIZE": page}
+        monkeypatch.setattr(session.os, "sysconf", sizes.__getitem__)
+
+    host(16)
+    assert session._driver_memory() == "8192m"
+    host(256)
+    assert session._driver_memory() == f"{48 * 1024}m"
+
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "3g")
+    assert session._driver_memory() == "3g"

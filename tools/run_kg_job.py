@@ -208,15 +208,8 @@ def main() -> None:
             )
 
             drop_bucketed(spark, tbl)
-        cmap = ckpt.get_or_compute(
-            spark, "entities", lambda: kg_pipeline.canonicalize(mentions),
-            variant=variant,
-        )
-        triples = ckpt.get_or_compute(
-            spark, "triples",
-            lambda: kg_pipeline.materialize_triples(mentions, cmap),
-            partition_by=("pred",), lineage_key="pred",
-            variant=variant,
+        triples = kg_pipeline.entities_and_triples(
+            ckpt, spark, mentions, variant=variant
         )
     else:
         triples = kg_pipeline.run_pipeline(
