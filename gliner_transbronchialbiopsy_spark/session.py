@@ -10,16 +10,28 @@ stages + a handful of wide shuffles; see SURVEY.md §4):
 - UTC session timezone so timestamp semantics match the DuckDB oracle.
 - shuffle.partitions sized to cores for local runs; on a real cluster
   AQE coalesces from a deliberately high initial number.
+- Python workers fork from `pydaemon`, pyspark's daemon with a lazy
+  `zipimporter.invalidate_caches`: under CPython < 3.13 every task's
+  `importlib.invalidate_caches()` otherwise re-reads the directories of
+  pyspark.zip, py4j and the spark-core jar (~0.2 s of CPU per task on
+  4 vCPUs). CPython 3.13+ already defers that re-read; there the module
+  only starts pyspark's daemon.
+  The package's parent directory goes on the workers' PYTHONPATH, so
+  the daemon and the pickled UDFs import from any driver cwd.
 """
 
 from __future__ import annotations
 
 import os
+import warnings
 import weakref
 
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+# the directory that holds this package: the workers import from it
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_local_dir() -> str:
@@ -79,6 +91,11 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.local.dir", _default_local_dir())
         .config("spark.driver.extraJavaOptions", "-Djava.io.tmpdir=/tmp")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
+        .config(
+            "spark.python.daemon.module",
+            "gliner_transbronchialbiopsy_spark.pydaemon",
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -102,8 +119,12 @@ def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
     first Python-stage query after an otherwise-warm session ran 7.6s
     cold vs 5.5s with a warmed pool — ~2s of interpreter forking and
     imports that belongs to session setup, not to whichever operator
-    happens to run first. Skippable via SPARK_GRAFT_NO_WORKER_WARMUP=1
-    (e.g. pure-JVM batch jobs that never cross the Python boundary)."""
+    happens to run first. It is also the first job to start the worker
+    daemon (`pydaemon`). A failure does not fail session creation but is
+    reported as a warning, so a daemon that cannot start shows here and
+    not first at some later Python stage. Skippable via
+    SPARK_GRAFT_NO_WORKER_WARMUP=1 (e.g. pure-JVM batch jobs that never
+    cross the Python boundary)."""
     if os.environ.get("SPARK_GRAFT_NO_WORKER_WARMUP"):
         return
     sc = spark.sparkContext
@@ -125,7 +146,7 @@ def _warm_python_workers(spark: SparkSession, cpus: int) -> None:
             .mode("overwrite")
             .save()
         )
-    except Exception:
-        # warm-up is best-effort: a worker-spawn hiccup here must not
-        # fail session creation (the real stage will retry its own)
-        pass
+    except Exception as e:
+        # best effort: a worker-spawn hiccup here must not fail session
+        # creation (the real stage retries its own), but it is reported
+        warnings.warn(f"Python worker warm-up failed: {e!r}", stacklevel=2)

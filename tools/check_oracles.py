@@ -16,7 +16,10 @@ import pandas as pd
 sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod  # noqa: E402
-from gliner_transbronchialbiopsy_spark.session import get_spark  # noqa: E402
+from gliner_transbronchialbiopsy_spark.session import (  # noqa: E402
+    DEFAULT_CPUS,
+    get_spark,
+)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events "
@@ -66,7 +69,12 @@ def bits_equal(g: pd.DataFrame, w: pd.DataFrame) -> pd.Series:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    spark = get_spark("oracle_check", cpus=16, shuffle_partitions=16)
+    # cores from SPARK_GRAFT_CPUS, as bench.py takes them; 16 shuffle
+    # partitions whatever the core count, so every query is partitioned
+    # as before
+    spark = get_spark(
+        "oracle_check", cpus=DEFAULT_CPUS, shuffle_partitions=16
+    )
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
