@@ -7,7 +7,7 @@ Usage:
   python bench_extra.py stages dedup_minhash            # stage breakdown
 
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-     SPARK_GRAFT_CPUS   (default 32).
+     SPARK_GRAFT_CPUS   (default: the host's cores).
 
 Timing methodology mirrors bench.py exactly: same session factory, same
 warm-up, noop sink (kg_triples: count, as in bench.py), wall seconds.
@@ -25,7 +25,10 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod  # noqa: E402
-from gliner_transbronchialbiopsy_spark.session import get_spark  # noqa: E402
+from gliner_transbronchialbiopsy_spark.session import (  # noqa: E402
+    DEFAULT_CPUS,
+    get_spark,
+)
 
 
 def _bench_fn(name):
@@ -49,8 +52,9 @@ def main() -> None:
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark("bench_extra", cpus=cpus, shuffle_partitions=cpus)
+    spark = get_spark(
+        "bench_extra", cpus=DEFAULT_CPUS, shuffle_partitions=DEFAULT_CPUS
+    )
     qs = entrymod.queries()
     names = args.names.split(",")
 

@@ -18,6 +18,14 @@ stages + a handful of wide shuffles; see SURVEY.md §4):
   only starts pyspark's daemon.
   The package's parent directory goes on the workers' PYTHONPATH, so
   the daemon and the pickled UDFs import from any driver cwd.
+- Generated code is compiled once per session: the codegen cache holds
+  1000 classes, not Spark's 100, which the KG job alone outgrows. With
+  100, every warm 300-doc `kg_build` pass recompiled 86 classes and
+  every warm `query_mix` pass 37-41 (4 vCPUs); with 1000, 0 and 0-4
+  (the 0-4 are the two plans Spark picks between for the
+  `kg_sparql_update` distinct counts, each compiled once).
+- Cores default to SPARK_GRAFT_CPUS, else the cores this process may
+  run on.
 """
 
 from __future__ import annotations
@@ -27,8 +35,6 @@ import warnings
 import weakref
 
 from pyspark.sql import SparkSession
-
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # the directory that holds this package: the workers import from it
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -64,6 +70,17 @@ def _driver_memory() -> str:
     return f"{min(phys // 2, 48 << 30) >> 20}m"
 
 
+def _default_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    override = os.environ.get("SPARK_GRAFT_CPUS")
+    if override:
+        return int(override)
+    return len(os.sched_getaffinity(0))
+
+
+DEFAULT_CPUS = _default_cpus()
+
+
 def get_spark(
     app_name: str = "gliner_tbb_spark",
     cpus: int | None = None,
@@ -87,6 +104,13 @@ def get_spark(
         # first stage is an expensive per-row UDF
         .config("spark.sql.files.maxPartitionBytes", "8m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        # generated classes are cached by their source, and Spark's
+        # default of 100 entries is below the engine's working set.
+        # Distinct classes compiled in one session (CodegenMetrics
+        # compile counter, 4 vCPUs): perfbench kg_build 113, query_mix
+        # 146, the 16 bench.py leaves at sf0.1 232. A static conf: it
+        # sizes the cache once, for the first session of a JVM
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.local.dir", _default_local_dir())

@@ -255,8 +255,15 @@ class CheckpointManager:
                     F.crc32(F.concat_ws("\x1f", *back.columns))
                 ).alias("content_fingerprint"),
             )
-            lineage.write.mode("overwrite").parquet(str(d / "_lineage"))
-            metrics["lineage_partitions"] = lineage.count()
+            # the group count rides the lineage write, as `rows` rides
+            # the stage write: no second scan and group-by of the snapshot
+            lineage_obs = Observation(f"ckpt_lineage_{stage}")
+            (
+                lineage.observe(lineage_obs, F.count(F.lit(1)).alias("n"))
+                .write.mode("overwrite")
+                .parquet(str(d / "_lineage"))
+            )
+            metrics["lineage_partitions"] = lineage_obs.get["n"]
         (d / "_metrics.json").write_text(json.dumps(metrics, indent=2))
 
     def get_or_compute_sharded(

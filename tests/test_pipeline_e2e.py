@@ -391,6 +391,56 @@ def test_mention_id_null_id_columns_distinct(spark):
     assert len(ids) == 2 and ids[0] != ids[1]
 
 
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_checkpoint_lineage_count_rides_the_lineage_write(spark, tmp_path):
+    """The lineage group count is observed on the lineage write: one job
+    for the stage write, two (shuffle map + result) for the grouped
+    lineage write, and no re-run of the group-by to count it."""
+    import json
+
+    mgr = CheckpointManager(str(tmp_path))
+    df = spark.range(0, 200, numPartitions=2).select(
+        F.col("id"), F.format_string("p%d", F.col("id") % 7).alias("pred")
+    )
+    for stage, rows in (("seven", df), ("none", df.filter("id < 0"))):
+        n_jobs = _jobs_in_group(
+            spark, f"lineage_{stage}",
+            lambda: mgr.write(stage, rows, lineage_key="pred"),
+        )
+        assert n_jobs == 3
+        m = json.loads((tmp_path / stage / "_metrics.json").read_text())
+        lineage = spark.read.parquet(str(tmp_path / stage / "_lineage"))
+        assert m["lineage_partitions"] == lineage.count()
+    assert mgr.metrics("seven")["lineage_partitions"] == 7
+    assert mgr.metrics("none")["lineage_partitions"] == 0
+
+
+def test_warm_pipeline_run_compiles_no_classes(spark, tmp_path):
+    """get_spark sizes Spark's generated-class cache above the KG job's
+    working set, so a second run of the same pipeline in one session
+    reuses every class the first run compiled (a 100-entry cache,
+    Spark's default, evicts and recompiles them)."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "1000"
+    compiles = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+    docs = spark.createDataFrame(corpus.generate_corpus(n_docs=30, seed=42)[0])
+    kg_pipeline.run_pipeline(spark, docs, str(tmp_path / "cold"))
+    before = compiles.getCount()
+    kg_pipeline.run_pipeline(spark, docs, str(tmp_path / "warm"))
+    assert compiles.getCount() - before == 0
+
+
 def test_checkpoint_empty_stage_roundtrips(spark, tmpdir_path):
     """An empty stage (e.g. zero mentions at tiny scale) must read back
     with its schema instead of failing UNABLE_TO_INFER_SCHEMA."""

@@ -103,6 +103,15 @@ def test_driver_memory_is_half_the_host_capped_at_48g(monkeypatch):
     assert session._driver_memory() == "3g"
 
 
+def test_cpus_default_to_the_cores_this_process_may_use(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    assert session._default_cpus() == 3
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "12")
+    assert session._default_cpus() == 12
+
+
 def _write_zip(path, modules):
     with zipfile.ZipFile(path, "w") as zf:
         for name, src in modules.items():

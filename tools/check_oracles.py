@@ -69,7 +69,7 @@ def bits_equal(g: pd.DataFrame, w: pd.DataFrame) -> pd.Series:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
-    # cores from SPARK_GRAFT_CPUS, as bench.py takes them; 16 shuffle
+    # cores from SPARK_GRAFT_CPUS, else the host's (DEFAULT_CPUS); 16 shuffle
     # partitions whatever the core count, so every query is partitioned
     # as before
     spark = get_spark(

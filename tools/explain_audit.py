@@ -5,13 +5,16 @@ and checks the properties that matter at 100 TB:
 - dimension joins go broadcast
 - non-UDF stages sit inside WholeStageCodegen spans
 
-Writes PLANS.md. Usage: python tools/explain_audit.py [sf_dir]
+Writes PLANS.md with Spark's per-session ids masked, so a rerun on
+unchanged plans leaves it byte-identical.
+Usage: python tools/explain_audit.py [sf_dir]
 """
 
 from __future__ import annotations
 
 import contextlib
 import io
+import re
 import sys
 
 sys.path.insert(0, ".")
@@ -685,6 +688,16 @@ AUDIT = {
 }
 
 
+# expression ids (`doc_id#60414`, `id#5L`), exchange ids (`plan_id=12`,
+# `[id=#7]`) and RDD ids (`MapPartitionsRDD[732]`) are numbered per
+# session: every run differs
+_SESSION_IDS = re.compile(r"(#|plan_id=|\[id=|RDD\[)\d+")
+
+
+def mask_session_ids(plan: str) -> str:
+    return _SESSION_IDS.sub(r"\1_", plan)
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -740,7 +753,8 @@ def main() -> int:
         )
         ckpt.write("triples", snap, partition_by=("pred",), lineage_key="pred")
         pruned = ckpt.read(spark, "triples").filter(F.col("pred") == "grade")
-        plan = plan_of(pruned)
+        # the scan's location names a fresh temporary directory per run
+        plan = plan_of(pruned).replace(td, "<tmpdir>")
         n_grade = pruned.count()
         checks = []
         pf = plan.split("PartitionFilters: [", 1)
@@ -819,7 +833,7 @@ def main() -> int:
             graphs=(("src2", (("?d", "engine", "?e"),)),)
         )
         sols = composer.compose(t_empty, q, quads=quads)
-        plan = plan_of(sols)
+        plan = plan_of(sols).replace(td, "<tmpdir>")
         n_src2 = sols.count()
         checks = []
         pf = plan.split("PartitionFilters: [", 1)
@@ -867,13 +881,13 @@ def main() -> int:
         )
 
     with open("PLANS.md", "w") as f:
-        f.write(
+        f.write(mask_session_ids(
             "# PLANS — physical-plan audit (`.explain('formatted')`)\n\n"
             "Checked properties: filter pushdown to parquet scans, "
             "broadcast joins on dimension tables, whole-stage codegen "
             "for JVM stages, Python confined to the one MapInPandas "
             "detection stage.\n\n" + "\n".join(sections)
-        )
+        ))
     n_cases = len(AUDIT) + 2  # + the two behavioral pruning cases
     print(f"{n_cases - len({n for n, _ in failures})}/{n_cases} clean; "
           f"failures: {failures}")
