@@ -105,6 +105,8 @@ AUDIT = {
     # (plan stays O(1) deep); the final degree count is a plain
     # HashAggregate over the checkpointed survivor edges, zero Python
     "graph_kcore": ("Scan ExistingRDD", "HashAggregate", "!InPandas"),
+    # OPTIONAL is a left outer join onto the required bindings
+    "kg_bgp_optional": ("LeftOuter", "!InPandas"),
     # UNION is plan-level concatenation (no shuffle of its own); the
     # VALUES inline table joins broadcast; zero Python
     "kg_bgp_union": ("Union", "BroadcastHashJoin", "!InPandas"),
@@ -257,6 +259,9 @@ AUDIT = {
         "!BroadcastNestedLoopJoin",
         "!InPandas",
     ),
+    # composed CONSTRUCT: the OPTIONAL group is a left outer join, the
+    # two head templates a plan-level union
+    "kg_composed_construct": ("LeftOuter", "!InPandas"),
     # composed aggregates: two pred-pruned scans of the checkpointed
     # triples, one left join, one partial+final aggregate pair
     "kg_composed_agg": ("Scan ExistingRDD", "HashAggregate", "!InPandas"),
@@ -284,6 +289,12 @@ AUDIT = {
         "!BroadcastNestedLoopJoin",
         "!InPandas",
     ),
+    # two independent UNION chains: each chain is a plan-level union
+    # of its branch scans, the chains join on the shared ?d
+    "kg_sparql_multiunion": ("Union", "!InPandas"),
+    # bounded repetition p{1,2}: the optional second step desugars to
+    # a zero-length union branch
+    "kg_sparql_repetition": ("Union", "!InPandas"),
     # SPARQL DESCRIBE (round-5): the description is ONE left_semi join
     # of the triple store against the distinct described-node set —
     # never a nested loop, zero Python
@@ -585,6 +596,9 @@ AUDIT = {
         "!InPandas",
         "!BroadcastNestedLoopJoin",
     ),
+    # GRAPH ?g group through the text front-end: the two 4-term quad
+    # scans join on BOTH ?d and ?g (same-graph matching)
+    "kg_sparql_graph": ("Left keys [2]", "!InPandas"),
     # Naive Bayes: dense model broadcast onto per-doc bucket counts,
     # partial-combine aggregates, argmax is an agg (no window), JVM
     "nb_classify": (
