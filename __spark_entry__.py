@@ -3519,8 +3519,8 @@ def _driver_rotation_order(names: list[str]) -> list[str]:
     registry outside the hard driver signal forever. This orders the
     registry least-recently-driver-covered FIRST, derived purely from
     the committed CORRECTNESS_r*.json artifacts. Order (round-5
-    VERDICT #1/#4): queries RED in their most recent artifact lead
-    (a failed driver row must be re-demonstrated green the very next
+    VERDICT #1/#4): queries RED in their own most recent artifact row
+    lead, whatever round that row is in (a failed driver row must be re-demonstrated green the very next
     round, not after a full rotation), then never-covered queries,
     then oldest-covered; registry order breaks ties via the stable
     sort — so every query lands in a driver artifact within
@@ -3558,11 +3558,8 @@ def _driver_rotation_order(names: list[str]) -> list[str]:
             if k not in last_result or rnd > last_result[k][0]:
                 last_result[k] = (rnd, green)
     def _key(n: str):
-        rnd, green = last_result.get(n, (-1, True))
-        red_last = (not green) and rnd == max(
-            (r for r, _ in last_result.values()), default=-1
-        )
-        return (0 if red_last else 1, last_seen.get(n, -1))
+        _, green = last_result.get(n, (-1, True))
+        return (0 if not green else 1, last_seen.get(n, -1))
     return sorted(names, key=_key)
 
 

@@ -12,18 +12,25 @@ A pattern is a (s, p, o) triple of terms; a term starting with '?' is
 a variable, anything else a constant. ``bgp_match`` compiles the
 pattern list to:
 
-1. one filtered scan per pattern — constants become pushed-down
-   predicates on the triple scan (pred = 'engine' reaches the parquet
-   reader as a PushedFilter, and partition-prunes a pred-partitioned
-   triples snapshot), variables become column renames;
-2. a greedy join order — patterns with the most constants (most
-   selective scans) first, then always a pattern sharing a variable
-   with what's bound so far (no cartesian unless the query itself is
-   disconnected, which raises by default);
+1. one filtered scan per pattern (``_scan``) — constants become
+   pushed-down predicates on the triple scan (pred = 'engine' reaches
+   the parquet reader as a PushedFilter, and partition-prunes a
+   pred-partitioned triples snapshot), variables become column
+   renames;
+2. a greedy join order (``_join_group``) — patterns with the most
+   constants (most selective scans) first, then always a pattern
+   sharing a variable with what's bound so far (no cartesian unless
+   the query itself is disconnected, which raises by default);
 3. equi-joins on the shared variables, each a hash join on the
    variable columns. Matching SPARQL set semantics, each pattern scan
    is deduplicated, so duplicate triple rows (same assertion emitted
    by two pipeline versions) don't multiply the bindings.
+
+``_join_group`` is the one join planner of the KG query layer: rule
+bodies (operators/rules.py, per-atom delta/full scans) and every
+composer group (operators/composer.py — path atoms, GRAPH groups over
+quads, the stats-driven order of operators/kgstats.py) hand it their
+prebuilt relations and a per-relation rank.
 
 At 10^12 triples the win is exactly the classic BGP plan: every scan
 is pred-pruned before any join, and AQE picks broadcast sides for the
@@ -42,12 +49,20 @@ def _is_var(term: str) -> bool:
     return isinstance(term, str) and term.startswith("?")
 
 
-def _scan(triples: DataFrame, pattern: tuple) -> tuple[DataFrame, set]:
-    """One pattern -> (deduped scan with variable columns, var set)."""
+def _n_consts(pattern) -> int:
+    return sum(not _is_var(x) for x in pattern)
+
+
+def _scan(
+    triples: DataFrame, pattern: tuple, positions: tuple = _POS
+) -> tuple[DataFrame, set]:
+    """One pattern -> (deduped scan with variable columns, var set).
+    ``positions`` names the relation's columns the pattern's terms
+    match, in order — (g, subj, pred, obj) for a quad pattern."""
     cond = []
     proj = []
     vars_: dict[str, str] = {}
-    for pos, term in zip(_POS, pattern):
+    for pos, term in zip(positions, pattern):
         if _is_var(term):
             name = term[1:]
             if not name:
@@ -67,6 +82,56 @@ def _scan(triples: DataFrame, pattern: tuple) -> tuple[DataFrame, set]:
         # ASK-style fully-ground pattern: expose a constant marker
         return df.select(F.lit(1).alias("_ask")).distinct(), set()
     return df.select(*proj).distinct(), set(vars_)
+
+
+def _join_group(
+    rels: list, rank: list, allow_cartesian: bool, label: str
+) -> tuple[DataFrame, set]:
+    """Greedy connected-first join of prebuilt ``(DataFrame, vars)``
+    relations -> (solutions, bound vars).
+
+    Variable relations are ordered by ``(rank[i], i)``; the first one
+    seeds, then the loop always takes the first pending relation that
+    shares a bound variable (an equi-join on the shared variables).
+    When none does the group is disconnected: raise, or with
+    ``allow_cartesian`` cross-join the first pending one. Fully-ground
+    (ASK-style) relations bind no variables: they are pure existence
+    gates, cross-joined with their <=1-row relations LAST so they never
+    seed the order (seeding with an empty bound set would spuriously
+    disconnect every variable relation). A group with no variables
+    returns the one-column ``_ask`` existence relation."""
+    ask = [df for df, vs in rels if not vs]
+    pending = sorted(
+        (i for i, (_, vs) in enumerate(rels) if vs),
+        key=lambda i: (rank[i], i),
+    )
+    bound: set = set()
+    if pending:
+        acc, vs = rels[pending.pop(0)]
+        bound |= vs
+    else:
+        acc = ask.pop(0)
+    while pending:
+        nxt = next((i for i in pending if rels[i][1] & bound), None)
+        if nxt is None:
+            if not allow_cartesian:
+                raise ValueError(
+                    f"disconnected {label} (no shared variable); pass "
+                    "allow_cartesian=True to cross-join the components"
+                )
+            nxt = pending[0]
+        pending.remove(nxt)
+        df, vs = rels[nxt]
+        shared = sorted(vs & bound)
+        if shared:
+            acc = acc.join(df, on=shared, how="inner")
+        else:
+            acc = acc.crossJoin(df)
+        bound |= vs
+    for n, df in enumerate(ask):
+        acc = acc.crossJoin(df.select(F.lit(1).alias(f"_ask{n}")))
+        acc = acc.drop(f"_ask{n}")
+    return acc, bound
 
 
 def _values_with_undef(acc: DataFrame, cols, rows) -> DataFrame:
@@ -214,57 +279,19 @@ def bgp_match(
     t = triples.select(
         F.col(subj).alias("subj"), F.col(pred).alias("pred"), F.col(obj).alias("obj")
     )
-    scans = [_scan(t, p) for p in patterns]
-
-    # fully-ground (ASK-style) patterns bind no variables: they are
-    # pure existence filters — applied LAST as crossJoins with their
-    # <=1-row relations so they never seed the greedy order (seeding
-    # with an empty bound set would spuriously disconnect every
-    # variable pattern)
-    ask = [i for i in range(len(scans)) if not scans[i][1]]
-    var_idx = [i for i in range(len(scans)) if scans[i][1]]
-    if not var_idx:
+    acc, bound = _join_group(
+        [_scan(t, p) for p in patterns],
+        [-_n_consts(p) for p in patterns],
+        allow_cartesian,
+        "BGP",
+    )
+    if not bound:
         if optional:
             raise ValueError(
                 "optional patterns cannot attach to a variable-free "
                 "(ASK-style) required block"
             )
-        acc = scans[ask[0]][0]
-        for i in ask[1:]:
-            acc = acc.crossJoin(scans[i][0].select(F.lit(1).alias(f"_ask{i}")))
-        # stable one-column existence relation regardless of arity
-        return acc.select("_ask")
-
-    # greedy order: most-constant pattern first, then connected-first
-    order = sorted(
-        var_idx,
-        key=lambda i: (-sum(not _is_var(x) for x in patterns[i]), i),
-    )
-    pending = list(order)
-    first = pending.pop(0)
-    acc, bound = scans[first]
-    while pending:
-        nxt = next((i for i in pending if scans[i][1] & bound), None)
-        if nxt is None:
-            if not allow_cartesian:
-                raise ValueError(
-                    "disconnected BGP (no shared variable); pass "
-                    "allow_cartesian=True to cross-join the components"
-                )
-            nxt = pending[0]
-        pending.remove(nxt)
-        df, vs = scans[nxt]
-        shared = sorted(vs & bound)
-        if shared:
-            acc = acc.join(df, on=shared, how="inner")
-        else:
-            acc = acc.crossJoin(df)
-        bound |= vs
-    for n, i in enumerate(ask):
-        acc = acc.crossJoin(
-            scans[i][0].select(F.lit(1).alias(f"_ask{n}"))
-        )
-        acc = acc.drop(f"_ask{n}")
+        return acc
     for p in optional or []:
         df, vs = _scan(t, p)
         shared = sorted(vs & bound)

@@ -11,7 +11,8 @@ analogue is the dashboard combining filters and stats ad hoc
 (/root/reference/src/streamlit/app/app.py:349-442); this module is
 the declarative form: a :class:`KGQuery` is the logical query, and
 :func:`compose` compiles it through the SAME per-operator compilers
-(``bgp._scan`` pattern scans, ``paths.path_edges`` /
+(``bgp._scan`` pattern scans, the ``bgp._join_group`` join planner,
+``paths.path_edges`` /
 ``paths.path_reachable`` path algebra, ``bgp._apply_solution_mods``
 modifier tail), so composed queries inherit every documented semantic
 (set-semantic scans, NULL-rejecting OPTIONAL chains, the MINUS
@@ -23,10 +24,11 @@ triples:
 - every pattern atom stays a pred-pruned scan of the one shared
   triple projection (constants reach the reader as PushedFilters and
   partition-prune a pred-partitioned snapshot);
-- the greedy join order seeds with the most-constant pattern scan and
-  always extends along a shared variable, so selective blocks
-  restrict expensive ones instead of running independently and
-  joining at the end;
+- the greedy join order (``bgp._join_group``, the one planner that
+  bgp_match and rule bodies also run) seeds with the most-constant
+  pattern scan and always extends along a shared variable, so
+  selective blocks restrict expensive ones instead of running
+  independently and joining at the end;
 - path atoms with a GROUND endpoint compile to the seeded image plan
   (:func:`paths.path_reachable` — frontier-sized, closure-free);
   var-var atoms compile to :func:`paths.path_edges`, whose ``plus``
@@ -126,34 +128,6 @@ def _is_path(item) -> bool:
 _QPOS = ("g", "subj", "pred", "obj")
 
 
-def _quad_scan(qt: DataFrame, pattern4: tuple) -> tuple[DataFrame, set]:
-    """One 4-term (g, s, p, o) pattern over the quad relation ->
-    (deduped scan with variable columns, var set) — bgp._scan
-    generalized to the graph position. Constants (including a ground
-    graph name) become pushed-down predicates that partition-prune a
-    graph-partitioned quad snapshot."""
-    cond, proj = [], []
-    vars_: dict[str, str] = {}
-    for pos, term in zip(_QPOS, pattern4):
-        if _bgp._is_var(term):
-            name = term[1:]
-            if not name:
-                raise ValueError(f"empty variable name in quad {pattern4!r}")
-            if name in vars_:
-                cond.append(F.col(pos) == F.col(vars_[name]))
-            else:
-                vars_[name] = pos
-                proj.append(F.col(pos).alias(name))
-        else:
-            cond.append(F.col(pos) == F.lit(term))
-    df = qt
-    for c in cond:
-        df = df.filter(c)
-    if not proj:
-        return df.select(F.lit(1).alias("_ask")).distinct(), set()
-    return df.select(*proj).distinct(), set(vars_)
-
-
 def _compile_graph_group(
     qt: DataFrame,
     gterm: str,
@@ -169,8 +143,9 @@ def _compile_graph_group(
     graph-partition predicate) and hands the group to the FULL group
     compiler — property paths, the greedy/stats join order, every
     documented semantic apply within that one named graph. A VARIABLE
-    graph term compiles each pattern as a 4-term scan (the graph
-    column binds ?g and automatically connects the group's scans);
+    graph term compiles each pattern as a 4-term ``bgp._scan`` over
+    (g, subj, pred, obj) (the graph column binds ?g and
+    automatically connects the group's scans);
     paths under a variable graph term raise — a path closure is
     per-graph, so evaluating one per binding would be a join-order
     explosion, not a scan."""
@@ -183,53 +158,20 @@ def _compile_graph_group(
         return _compile_group(
             t_g, items, max_closure_rows, allow_cartesian, stats
         )
-    rels: list[tuple[DataFrame, set]] = []
-    n_consts: list[int] = []
     for it in items:
         if _is_path(it) or len(it) != 3:
             raise ValueError(
                 "GRAPH groups with a VARIABLE graph term take plain "
                 f"(s, p, o) triple patterns (no property paths), got {it!r}"
             )
-        rels.append(_quad_scan(qt, (gterm, *it)))
-        n_consts.append(
-            sum(not _bgp._is_var(x) for x in (gterm, *it))
-        )
-    ask = [i for i in range(len(rels)) if not rels[i][1]]
-    var_idx = [i for i in range(len(rels)) if rels[i][1]]
-    if not var_idx:
-        acc = rels[ask[0]][0]
-        for i in ask[1:]:
-            acc = acc.crossJoin(
-                rels[i][0].select(F.lit(1).alias(f"_ask{i}"))
-            ).drop(f"_ask{i}")
-        return acc, set()
-    order = sorted(var_idx, key=lambda i: (-n_consts[i], i))
-    pending = list(order)
-    first = pending.pop(0)
-    acc, bound = rels[first]
-    while pending:
-        nxt = next((i for i in pending if rels[i][1] & bound), None)
-        if nxt is None:
-            if not allow_cartesian:
-                raise ValueError(
-                    "disconnected GRAPH group (no shared variable); "
-                    "pass allow_cartesian=True to cross-join components"
-                )
-            nxt = pending[0]
-        pending.remove(nxt)
-        df, vs = rels[nxt]
-        shared = sorted(vs & bound)
-        if shared:
-            acc = acc.join(df, on=shared, how="inner")
-        else:
-            acc = acc.crossJoin(df)
-        bound |= vs
-    for n, i in enumerate(ask):
-        acc = acc.crossJoin(
-            rels[i][0].select(F.lit(1).alias(f"_askg{n}"))
-        ).drop(f"_askg{n}")
-    return acc, bound
+    # every 4-term scan binds ?g, so the group is always connected
+    pats = [(gterm, *it) for it in items]
+    return _bgp._join_group(
+        [_bgp._scan(qt, p, _QPOS) for p in pats],
+        [-_bgp._n_consts(p) for p in pats],
+        allow_cartesian,
+        "GRAPH group",
+    )
 
 
 def _path_relation(
@@ -288,98 +230,53 @@ def _compile_group(
     stats: "_kgstats.TripleStats | None" = None,
 ) -> tuple[DataFrame, set]:
     """Compile one conjunctive group (triple patterns + path atoms) to
-    (solutions, bound vars) with the bgp_match greedy discipline:
-    most-constant pattern scans seed, path relations join once a
-    shared variable is bound (they are the expensive relations), ASK
-    relations apply last as existence gates.
+    (solutions, bound vars) through ``bgp._join_group``, ranked
+    syntactically: most-constant pattern scans seed, path relations
+    join once a shared variable is bound (they are the expensive
+    relations), ASK relations apply last as existence gates.
 
-    With ``stats`` (operators/kgstats.TripleStats), the syntactic
-    heuristic is replaced by cost-based ordering: per-relation
-    cardinality estimates from predicate statistics, greedy minimal
-    estimated-join-size chaining (kgstats.order_group). Results are
-    identical either way — only the join ORDER changes."""
+    With ``stats`` (operators/kgstats.TripleStats), the rank is the
+    cost-based order instead: per-relation cardinality estimates from
+    predicate statistics, greedy minimal estimated-join-size chaining
+    (kgstats.order_group). Results are identical either way — only
+    the join ORDER changes."""
     if not items:
         raise ValueError("empty pattern group")
     rels: list[tuple[DataFrame, set]] = []
-    is_path: list[bool] = []
-    n_consts: list[int] = []
     for it in items:
         if _is_path(it):
             rels.append(_path_relation(t, it, max_closure_rows))
-            is_path.append(True)
-            n_consts.append(sum(not _bgp._is_var(x) for x in (it.src, it.dst)))
         else:
             if len(it) != 3:
                 raise ValueError(f"pattern must be a triple: {it!r}")
             rels.append(_bgp._scan(t, tuple(it)))
-            is_path.append(False)
-            n_consts.append(sum(not _bgp._is_var(x) for x in it))
-    ask = [i for i in range(len(rels)) if not rels[i][1]]
-    var_idx = [i for i in range(len(rels)) if rels[i][1]]
-    if not var_idx:
-        acc = rels[ask[0]][0].select(F.lit(1).alias("_ask")).distinct()
-        for i in ask[1:]:
-            acc = acc.crossJoin(
-                rels[i][0].select(F.lit(1).alias(f"_ask{i}"))
-            ).drop(f"_ask{i}")
-        return acc, set()
-    if stats is not None:
-        metas = []
-        for i in var_idx:
-            it = items[i]
-            if _is_path(it):
-                metas.append(
-                    _kgstats.estimate_path(it.src, it.spec, it.dst, stats)
-                )
-            else:
-                metas.append(_kgstats.estimate_pattern(tuple(it), stats))
-        # order_group raises the same disconnected-group error, so the
-        # cartesian contract is identical with and without stats
+    if stats is None:
+        # syntactic: scans before paths (the expensive relations),
+        # most constants first
+        rank = [
+            (True, -_bgp._n_consts((it.src, it.dst))) if _is_path(it)
+            else (False, -_bgp._n_consts(it))
+            for it in items
+        ]
+    else:
+        # cost-based: the position in kgstats.order_group's permutation
+        # of the variable relations. The permutation always extends
+        # along a shared variable when one exists, so the greedy loop
+        # reproduces it exactly; order_group raises the same
+        # disconnected-group error, so the cartesian contract is
+        # identical with and without stats
+        var_idx = [i for i, (_, vs) in enumerate(rels) if vs]
+        metas = [
+            _kgstats.estimate_path(it.src, it.spec, it.dst, stats)
+            if _is_path(it)
+            else _kgstats.estimate_pattern(tuple(it), stats)
+            for it in (items[i] for i in var_idx)
+        ]
+        rank = [0] * len(rels)
         perm = _kgstats.order_group(metas, allow_cartesian)
-        ordered = [var_idx[j] for j in perm]
-        first, pending = ordered[0], ordered[1:]
-        acc, bound = rels[first]
-        for nxt in pending:
-            df, vs = rels[nxt]
-            shared = sorted(vs & bound)
-            if shared:
-                acc = acc.join(df, on=shared, how="inner")
-            else:
-                acc = acc.crossJoin(df)
-            bound |= vs
-        for n, i in enumerate(ask):
-            acc = acc.crossJoin(
-                rels[i][0].select(F.lit(1).alias(f"_askg{n}"))
-            ).drop(f"_askg{n}")
-        return acc, bound
-    order = sorted(
-        var_idx, key=lambda i: (is_path[i], -n_consts[i], i)
-    )
-    pending = list(order)
-    first = pending.pop(0)
-    acc, bound = rels[first]
-    while pending:
-        nxt = next((i for i in pending if rels[i][1] & bound), None)
-        if nxt is None:
-            if not allow_cartesian:
-                raise ValueError(
-                    "disconnected query group (no shared variable); "
-                    "pass allow_cartesian=True to cross-join components"
-                )
-            nxt = pending[0]
-        pending.remove(nxt)
-        df, vs = rels[nxt]
-        shared = sorted(vs & bound)
-        if shared:
-            acc = acc.join(df, on=shared, how="inner")
-        else:
-            acc = acc.crossJoin(df)
-        bound |= vs
-    for n, i in enumerate(ask):
-        acc = acc.crossJoin(
-            rels[i][0].select(F.lit(1).alias(f"_askg{n}"))
-        ).drop(f"_askg{n}")
-    return acc, bound
+        for pos, j in enumerate(perm):
+            rank[var_idx[j]] = pos
+    return _bgp._join_group(rels, rank, allow_cartesian, "query group")
 
 
 def compose(

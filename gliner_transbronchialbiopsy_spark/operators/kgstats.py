@@ -2,7 +2,8 @@
 
 The composer's default join order is the classic syntactic heuristic
 (most-constant pattern scans first, then greedy shared-variable
-chaining — operators/composer._compile_group). That heuristic is
+chaining — operators/bgp._join_group, ranked by
+operators/composer._compile_group). That heuristic is
 blind to the DATA: two patterns with one constant each tie, and the
 tie-break is textual order, so a query that happens to list the huge
 predicate first builds the huge intermediate first. At 10^12 triples
@@ -25,9 +26,11 @@ This module is the System-R-lite fix, split in two:
   seed with the smallest estimated relation, then repeatedly join the
   connected relation minimizing the estimated join size
   ``|A| * |B| / prod(max(ndv_A[v], ndv_B[v]))`` over the shared
-  variables — the textbook independence estimator. Estimates steer
-  ONLY the order; results are bit-identical with or without stats
-  (inner joins commute), which is what the parity tests assert.
+  variables — the textbook independence estimator. The composer
+  hands the permutation to the same ``bgp._join_group`` loop as its
+  rank. Estimates steer ONLY the order; results are bit-identical
+  with or without stats (inner joins commute), which is what the
+  parity tests assert.
 
 The reference has no optimizer (its pandas dashboard pivots a
 corpus-sized frame per filter — src/streamlit/app/app.py:349-442);

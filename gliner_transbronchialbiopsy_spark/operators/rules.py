@@ -19,7 +19,8 @@ rules: "IF a doc mentions engine ?e AND op ?op THEN assert (?e runs
 
 Distributed shape per round: each rule body is a chain of equi-joins
 on shared variables (greedy connected order, constants pushed into
-the atom scans — identical planning to bgp_match); the delta swap
+the atom scans — bgp._join_group, the planner bgp_match runs, fed
+per-atom delta/full scans); the delta swap
 multiplies that by the number of body atoms but each variant joins a
 (small) delta against the indexed full relation, which AQE broadcasts
 when it fits. New facts are diffed against the known set with ONE
@@ -88,53 +89,21 @@ def _eval_body(full: DataFrame, delta: DataFrame | None, body: tuple) -> DataFra
     the delta and the rest the full relation — exactly the bindings
     that involve at least one last-round fact (plus re-derivations that
     the left_anti diff later drops; correctness needs no more)."""
-    if delta is None:
+    if delta is None or not any(_bgp._is_var(t) for pat in body for t in pat):
+        # round one, or a fully-ground body (no variable bindings to
+        # delta-restrict): evaluate the conjunction naively (a ground
+        # body is cheap: <=1 row per scan after dedup); the left_anti
+        # diff keeps idempotence
         return _bgp.bgp_match(full, list(body))
-    if all(not any(_bgp._is_var(t) for t in pat) for pat in body):
-        # fully-ground body: no variable bindings to delta-restrict —
-        # evaluate the existence conjunction naively (cheap: <=1 row
-        # per scan after dedup); the left_anti diff keeps idempotence
-        return _bgp.bgp_match(full, list(body))
+    rank = [-_bgp._n_consts(p) for p in body]
     variants = []
     for i in range(len(body)):
         scans = [_bgp._scan(delta if j == i else full, p) for j, p in enumerate(body)]
-        variants.append(_join_scans(scans, body))
+        variants.append(_bgp._join_group(scans, rank, False, "rule body")[0])
     acc = variants[0]
     for v in variants[1:]:
         acc = acc.unionByName(v)
     return acc.distinct()
-
-
-def _join_scans(scans, body) -> DataFrame:
-    """bgp_match's greedy connected join order over pre-built scans
-    (bgp_match always scans one relation; the semi-naive variants need
-    per-atom sources, so the ordering logic is restated here)."""
-    ask = [i for i in range(len(scans)) if not scans[i][1]]
-    var_idx = [i for i in range(len(scans)) if scans[i][1]]
-    if not var_idx:
-        raise ValueError("rule body binds no variables")
-    order = sorted(
-        var_idx,
-        key=lambda i: (-sum(not _bgp._is_var(x) for x in body[i]), i),
-    )
-    pending = list(order)
-    first = pending.pop(0)
-    acc, bound = scans[first]
-    while pending:
-        nxt = next((i for i in pending if scans[i][1] & bound), None)
-        if nxt is None:
-            raise ValueError(
-                "disconnected rule body (no shared variable between atoms)"
-            )
-        pending.remove(nxt)
-        df, vs = scans[nxt]
-        shared = sorted(vs & bound)
-        acc = acc.join(df, on=shared, how="inner")
-        bound |= vs
-    for n, i in enumerate(ask):
-        acc = acc.crossJoin(scans[i][0].select(F.lit(1).alias(f"_ask{n}")))
-        acc = acc.drop(f"_ask{n}")
-    return acc
 
 
 def _fire(bindings: DataFrame, heads: tuple) -> DataFrame:

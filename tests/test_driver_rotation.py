@@ -11,7 +11,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -85,3 +85,21 @@ def test_rotation_window_holds_reds_plus_fresh():
     fresh = [n for n in window if n not in latest]
     budget = 50 - len(reds)
     assert len(fresh) >= min(budget, len(uncovered_total))
+
+
+def test_red_row_leads_even_when_absent_from_latest_round(tmp_path, monkeypatch):
+    """A query red in r1 and absent from r2 still leads: red-first keys
+    on each query's own latest row, not on the globally latest round."""
+    green = {"rows_match": True, "schema_match": True}
+    red = {"rows_match": False, "schema_match": True}
+    (tmp_path / "CORRECTNESS_r01.json").write_text(
+        json.dumps({"red_q": red, "old_q": green})
+    )
+    (tmp_path / "CORRECTNESS_r02.json").write_text(
+        json.dumps({"old_q": green})
+    )
+    monkeypatch.setattr(
+        entrymod, "__file__", str(tmp_path / "__spark_entry__.py")
+    )
+    order = entrymod._driver_rotation_order(["old_q", "new_q", "red_q"])
+    assert order == ["red_q", "new_q", "old_q"]

@@ -1,11 +1,22 @@
 """KG query-layer operators: BGP matching, bounded reachability,
 RDFS-lite type inference, N-Triples serialization."""
 
+import importlib.util
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
-from gliner_transbronchialbiopsy_spark.operators import bgp, graph
+from gliner_transbronchialbiopsy_spark.operators import bgp, composer, graph, rules
 from gliner_transbronchialbiopsy_spark.sources import export
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_spec = importlib.util.spec_from_file_location(
+    "explain_audit", os.path.join(REPO, "tools", "explain_audit.py")
+)
+explain_audit = importlib.util.module_from_spec(_spec)
+_spec.loader.exec_module(explain_audit)
 
 
 def _triples(spark, rows):
@@ -119,6 +130,56 @@ def test_bgp_all_ground_ask(spark):
         bgp.bgp_match(
             t, [("d1", "engine", "spark")], optional=[("?d", "exec_op", "?o")]
         )
+
+
+# one join planner (bgp._join_group) behind every caller: the same
+# pattern list plans to the same physical plan, Spark's per-session
+# ids masked, whether it enters through bgp_match, a composer group or
+# a rule body's first (naive) round
+_PLANNER_CASES = {
+    "constant_seeded_chain": (
+        [("?e", "runs", "?op"), ("?d", "engine", "?e"),
+         ("?d", "exec_op", "join")],
+        False,
+    ),
+    "ask_mixed_with_variables": (
+        [("?d", "exec_op", "?op"), ("d1", "engine", "spark"),
+         ("?d", "engine", "?e")],
+        False,
+    ),
+    "repeated_variable": ([("?x", "runs", "?x"), ("?x", "exec_op", "?o")], False),
+    "disconnected_pair": ([("?a", "engine", "?b"), ("?c", "runs", "?d")], True),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_PLANNER_CASES))
+def test_one_planner_plans_every_caller_alike(spark, case):
+    pats, cartesian = _PLANNER_CASES[case]
+    t = _triples(
+        spark,
+        [("d1", "engine", "spark"), ("d1", "exec_op", "join"),
+         ("spark", "runs", "join"), ("join", "runs", "join")],
+    )
+
+    def plan(df):
+        # the physical plan, and the analyzed logical plan it came from
+        # (the optimizer prunes the ASK gates' marker columns, so only
+        # the logical plan shows how each caller built them)
+        return explain_audit.mask_session_ids(
+            explain_audit.plan_of(df)
+            + df._jdf.queryExecution().analyzed().toString()
+        )
+
+    # plans are compared before anything executes: a collected
+    # adaptive plan prints its final form
+    ref = bgp.bgp_match(t, pats, allow_cartesian=cartesian)
+    composed = composer.compose(
+        t, composer.KGQuery(where=tuple(pats)), allow_cartesian=cartesian
+    )
+    assert plan(composed) == plan(ref)
+    if not cartesian:  # rule bodies never cross-join
+        assert plan(rules._eval_body(t, None, tuple(pats))) == plan(ref)
+    assert sorted(composed.collect()) == sorted(ref.collect())
 
 
 # --- reachability -----------------------------------------------------------
