@@ -9,28 +9,33 @@ materializes every column for every subject, a BGP touches only the
 predicates named in the query.
 
 A pattern is a (s, p, o) triple of terms; a term starting with '?' is
-a variable, anything else a constant. ``bgp_match`` compiles the
-pattern list to:
+a variable, anything else a constant. This module owns the two
+pieces every KG query is compiled from:
 
 1. one filtered scan per pattern (``_scan``) — constants become
    pushed-down predicates on the triple scan (pred = 'engine' reaches
    the parquet reader as a PushedFilter, and partition-prunes a
    pred-partitioned triples snapshot), variables become column
-   renames;
-2. a greedy join order (``_join_group``) — patterns with the most
-   constants (most selective scans) first, then always a pattern
-   sharing a variable with what's bound so far (no cartesian unless
-   the query itself is disconnected, which raises by default);
-3. equi-joins on the shared variables, each a hash join on the
-   variable columns. Matching SPARQL set semantics, each pattern scan
-   is deduplicated, so duplicate triple rows (same assertion emitted
-   by two pipeline versions) don't multiply the bindings.
+   renames. Matching SPARQL set semantics, each pattern scan is
+   deduplicated, so duplicate triple rows (same assertion emitted by
+   two pipeline versions) don't multiply the bindings;
+2. the greedy join planner (``_join_group``) — relations ranked first
+   (most constants, the most selective scans), then always one
+   sharing a variable with what's bound so far, each an equi-join (a
+   hash join on the shared variable columns); no cartesian unless the
+   query itself is disconnected, which raises by default.
 
 ``_join_group`` is the one join planner of the KG query layer: rule
-bodies (operators/rules.py, per-atom delta/full scans) and every
+bodies (operators/rules.py, per-atom delta/full scans), every
 composer group (operators/composer.py — path atoms, GRAPH groups over
-quads, the stats-driven order of operators/kgstats.py) hand it their
-prebuilt relations and a per-relation rank.
+quads, the stats-driven order of operators/kgstats.py) and the
+composer's required blocks (where, GRAPH groups, UNION chains,
+subqueries) hand it their prebuilt relations and a per-relation rank.
+
+``bgp_match`` and ``bgp_union`` are the pattern-list front-ends: each
+builds a :class:`composer.KGQuery` and compiles it with
+``composer.compose``, the one query compiler, so OPTIONAL, MINUS,
+UNION, FILTER and VALUES have one implementation.
 
 At 10^12 triples the win is exactly the classic BGP plan: every scan
 is pred-pruned before any join, and AQE picks broadcast sides for the
@@ -193,7 +198,7 @@ def _values_with_undef(acc: DataFrame, cols, rows) -> DataFrame:
 
 
 def _apply_solution_mods(acc: DataFrame, filters, values) -> DataFrame:
-    """Shared FILTER / VALUES tail for bgp_match and bgp_union.
+    """The FILTER / VALUES tail of ``composer.compose``.
 
     SPARQL scopes both to the whole group: VALUES joins the inline
     binding table onto the accumulated solutions (extending them with
@@ -235,7 +240,10 @@ def bgp_match(
     values: tuple | None = None,
     minus: list[list[tuple]] | None = None,
 ) -> DataFrame:
-    """Match a conjunctive pattern list against ``triples``.
+    """Match a conjunctive pattern list against ``triples`` — the
+    :class:`composer.KGQuery` ``where=patterns`` (one single-pattern
+    OPTIONAL group per ``optional`` pattern), compiled by
+    ``composer.compose``.
 
     Returns one row per binding of the pattern variables, one column
     per variable (set semantics — duplicate triples don't multiply).
@@ -247,8 +255,9 @@ def bgp_match(
     where unmatched, matching SPARQL's error-is-false on unbound).
     ``values`` (SPARQL VALUES) is ``(columns, rows)`` inline data
     inner-joined (broadcast) onto the solutions via the shared
-    variables; fresh columns extend each solution. UNDEF rows are not
-    supported.
+    variables; fresh columns extend each solution. An UNDEF cell
+    (None) makes its row a partial mapping that constrains only its
+    defined columns (``_values_with_undef``).
 
     ``minus`` (SPARQL MINUS) is a list of pattern groups; solutions
     compatible with any binding of a group on their SHARED variables
@@ -274,47 +283,21 @@ def bgp_match(
     later pattern bind the variable fresh. Order optionals so chains
     hang off required variables when that distinction matters.
     """
+    from . import composer as _composer
+
     if not patterns:
         raise ValueError("empty pattern list")
-    t = triples.select(
-        F.col(subj).alias("subj"), F.col(pred).alias("pred"), F.col(obj).alias("obj")
+    q = _composer.KGQuery(
+        where=tuple(patterns),
+        optional=tuple((p,) for p in optional or ()),
+        minus=tuple(tuple(g) for g in minus or ()),
+        filters=tuple(filters or ()),
+        values=values,
     )
-    acc, bound = _join_group(
-        [_scan(t, p) for p in patterns],
-        [-_n_consts(p) for p in patterns],
-        allow_cartesian,
-        "BGP",
+    return _composer.compose(
+        triples, q, subj=subj, pred=pred, obj=obj,
+        allow_cartesian=allow_cartesian,
     )
-    if not bound:
-        if optional:
-            raise ValueError(
-                "optional patterns cannot attach to a variable-free "
-                "(ASK-style) required block"
-            )
-        return acc
-    for p in optional or []:
-        df, vs = _scan(t, p)
-        shared = sorted(vs & bound)
-        if not shared:
-            raise ValueError(
-                f"optional pattern {p!r} shares no variable with the "
-                "bound set — a disconnected OPTIONAL is a cross product"
-            )
-        acc = acc.join(df, on=shared, how="left")
-        bound |= vs
-    for grp in minus or []:
-        mdf = bgp_match(
-            t.select(
-                F.col("subj"), F.col("pred"), F.col("obj")
-            ),
-            list(grp),
-            allow_cartesian=allow_cartesian,
-        )
-        shared = sorted(set(mdf.columns) & bound)
-        if not shared:
-            continue  # disjoint domains: SPARQL MINUS removes nothing
-        acc = acc.join(mdf.select(*shared).distinct(), on=shared, how="left_anti")
-    return _apply_solution_mods(acc, filters, values)
 
 
 def bgp_union(
@@ -328,9 +311,11 @@ def bgp_union(
     values: tuple | None = None,
 ) -> DataFrame:
     """SPARQL UNION: match each branch pattern list independently and
-    bag-union the solutions. Branch variable sets may differ — the
-    output carries the union of all variables, NULL where a branch
-    does not bind one (SPARQL's unbound). Each branch is set-semantic
+    bag-union the solutions (the :class:`composer.KGQuery`
+    ``union=branches``, compiled by ``composer.compose``). Branch
+    variable sets may differ — the output carries the union of all
+    variables, NULL where a branch does not bind one (SPARQL's
+    unbound). Each branch is set-semantic
     (like bgp_match); the union itself is a bag, so a binding produced
     by two branches appears twice — exactly SPARQL's multiset UNION
     over DISTINCT-projected branches, and what `count(*)` aggregates
@@ -346,16 +331,16 @@ def bgp_union(
     shuffle); each branch keeps its own pred-pruned scans and join
     order, and the optional VALUES join broadcasts. At 10^12 triples a
     UNION of k branches costs exactly the k branch plans."""
+    from . import composer as _composer
+
     if not branches:
         raise ValueError("empty branch list")
-    sols = [
-        bgp_match(
-            triples, pats, subj=subj, pred=pred, obj=obj,
-            allow_cartesian=allow_cartesian,
-        )
-        for pats in branches
-    ]
-    acc = sols[0]
-    for df in sols[1:]:
-        acc = acc.unionByName(df, allowMissingColumns=True)
-    return _apply_solution_mods(acc, filters, values)
+    q = _composer.KGQuery(
+        union=tuple(tuple(b) for b in branches),
+        filters=tuple(filters or ()),
+        values=values,
+    )
+    return _composer.compose(
+        triples, q, subj=subj, pred=pred, obj=obj,
+        allow_cartesian=allow_cartesian,
+    )

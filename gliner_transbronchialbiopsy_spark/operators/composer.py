@@ -10,13 +10,16 @@ contract query in __spark_entry__.py did exactly that. The reference's
 analogue is the dashboard combining filters and stats ad hoc
 (/root/reference/src/streamlit/app/app.py:349-442); this module is
 the declarative form: a :class:`KGQuery` is the logical query, and
-:func:`compose` compiles it through the SAME per-operator compilers
-(``bgp._scan`` pattern scans, the ``bgp._join_group`` join planner,
-``paths.path_edges`` /
-``paths.path_reachable`` path algebra, ``bgp._apply_solution_mods``
-modifier tail), so composed queries inherit every documented semantic
-(set-semantic scans, NULL-rejecting OPTIONAL chains, the MINUS
-shared-variable rule) without restating them.
+:func:`compose` — the one query compiler of the KG layer: bgp_match,
+bgp_union (and so a rule body's first round), CONSTRUCT, DESCRIBE,
+UPDATE and the SPARQL text front-end all compile through it —
+compiles it through the SAME per-operator compilers (``bgp._scan``
+pattern scans, the ``bgp._join_group`` join planner,
+``paths.path_edges`` / ``paths.path_reachable`` path algebra,
+``bgp._apply_solution_mods`` modifier tail), so composed queries
+inherit every documented semantic (set-semantic scans, NULL-rejecting
+OPTIONAL chains, the MINUS shared-variable rule) without restating
+them.
 
 Distributed shape — what composing into ONE plan buys at 10^12
 triples:
@@ -25,10 +28,12 @@ triples:
   triple projection (constants reach the reader as PushedFilters and
   partition-prune a pred-partitioned snapshot);
 - the greedy join order (``bgp._join_group``, the one planner that
-  bgp_match and rule bodies also run) seeds with the most-constant
-  pattern scan and always extends along a shared variable, so
-  selective blocks restrict expensive ones instead of running
-  independently and joining at the end;
+  rule bodies also run) seeds with the most-constant pattern scan and
+  always extends along a shared variable, so selective patterns
+  restrict expensive ones instead of running independently and
+  joining at the end; the required blocks (where, GRAPH groups, UNION
+  chains, subqueries) then form one more join step of the same
+  planner, in their written order;
 - path atoms with a GROUND endpoint compile to the seeded image plan
   (:func:`paths.path_reachable` — frontier-sized, closure-free);
   var-var atoms compile to :func:`paths.path_edges`, whose ``plus``
@@ -69,19 +74,25 @@ class KGQuery:
     and ``minus`` groups are sequences of items, each item a triple
     pattern tuple or a :class:`Path` atom.
 
-    Evaluation order (SPARQL group semantics): required ``where`` (and
-    ``union`` branches, bag-unioned then joined with ``where`` on the
-    shared variables; ``union_chains`` holds FURTHER independent UNION
-    chains, each bag-unioned then joined the same way — ``union`` is
-    the single-chain sugar) -> ``subqueries`` (each a nested KGQuery
-    evaluated bottom-up per the SPARQL 1.1 subquery rule, its
-    PROJECTED relation natural-joined with the group solutions on the
-    shared variables — the standard aggregate-then-join idiom) ->
-    ``optional`` left joins -> ``minus``
-    anti-joins -> ``exists`` / ``not_exists`` semi/anti joins ->
-    ``binds`` derived columns -> ``values`` -> ``filters`` -> GROUP BY
-    aggregates -> ``having`` group filters -> ``select`` projection ->
-    ``distinct`` -> ``order_by`` -> ``offset`` -> ``limit``.
+    Evaluation order (SPARQL group semantics): required blocks ->
+    ``optional`` left joins -> ``minus`` anti-joins -> ``exists`` /
+    ``not_exists`` semi/anti joins -> ``binds`` derived columns ->
+    ``values`` -> ``filters`` -> GROUP BY aggregates -> ``having``
+    group filters -> ``select`` projection -> ``distinct`` ->
+    ``order_by`` -> ``offset`` -> ``limit``.
+
+    The required blocks form ONE join step: the ``where`` group, each
+    ``graphs`` group, each UNION chain (``union`` is the first chain,
+    ``union_chains`` holds FURTHER independent ones; a chain's
+    branches are bag-unioned into one block) and each ``subqueries``
+    entry (a nested KGQuery evaluated bottom-up per the SPARQL 1.1
+    subquery rule; only its PROJECTED relation is a block — the
+    standard aggregate-then-join idiom). ``bgp._join_group`` joins
+    them on their shared variables, taking next the first block in
+    that written order that shares a variable with those already
+    joined: a variable-free block is an existence gate, and a block
+    sharing no variable with the others raises unless
+    ``allow_cartesian``.
 
     ``minus`` vs ``not_exists`` follow their divergent SPARQL specs:
     with no shared variable MINUS removes nothing, while NOT EXISTS
@@ -295,10 +306,12 @@ def compose(
 
     Returns one row per solution (or per group with aggregates), one
     column per projected variable / aggregate alias. Pattern, path,
-    OPTIONAL, MINUS, VALUES and FILTER semantics are exactly those of
-    the underlying compilers (operators/bgp.py, operators/paths.py) —
-    including their documented divergences — because this function
-    delegates to them; it owns only the composition.
+    VALUES and FILTER semantics are exactly those of the underlying
+    compilers (operators/bgp.py, operators/paths.py) — including their
+    documented divergences — because this function delegates to them;
+    it owns the block join, OPTIONAL, MINUS, [NOT] EXISTS, BIND and
+    the solution modifiers, the one copy of each that bgp_match and
+    bgp_union also run.
 
     ``stats`` (from operators/kgstats.collect_stats, computed once per
     triples snapshot) switches every group's join order from the
@@ -317,12 +330,16 @@ def compose(
             "query needs a where block, GRAPH group, union branches, "
             "or subqueries"
         )
-    acc: DataFrame | None = None
-    bound: set = set()
+    # the required blocks, each compiled to a (relation, vars) pair in
+    # written order, form ONE join step of the group planner: the first
+    # block that shares a variable with those already joined goes next,
+    # a variable-free block is an existence gate, and a disconnected
+    # block raises (or cross-joins with allow_cartesian)
+    rels: list[tuple[DataFrame, set]] = []
     if q.where:
-        acc, bound = _compile_group(
+        rels.append(_compile_group(
             t, q.where, max_closure_rows, allow_cartesian, stats
-        )
+        ))
     if q.graphs:
         # GRAPH groups match within NAMED graphs (the quad relation),
         # never the default graph — SPARQL 1.1 §13.3
@@ -338,76 +355,40 @@ def compose(
             F.col(obj).alias("obj"),
         )
         for gterm, gitems in q.graphs:
-            gdf, gvs = _compile_graph_group(
-                qt, gterm, gitems, allow_cartesian,
-                max_closure_rows=max_closure_rows, stats=stats,
+            rels.append(
+                _compile_graph_group(
+                    qt, gterm, gitems, allow_cartesian,
+                    max_closure_rows=max_closure_rows, stats=stats,
+                )
             )
-            if acc is None:
-                acc, bound = gdf, gvs
-                continue
-            shared = sorted(gvs & bound)
-            if shared:
-                acc = acc.join(gdf, on=shared, how="inner")
-            elif not gvs:
-                acc = acc.crossJoin(gdf.select(F.lit(1).alias("_ag"))).drop(
-                    "_ag"
-                )
-            elif allow_cartesian:
-                acc = acc.crossJoin(gdf)
-            else:
-                raise ValueError(
-                    "GRAPH group shares no variable with the bound "
-                    "solutions — a disconnected GRAPH group is a cross "
-                    "product; pass allow_cartesian=True if intended"
-                )
-            bound |= gvs
     for chain in chains:
+        # one UNION chain: its branches bag-unioned into one block
         branches = [
             _compile_group(t, br, max_closure_rows, allow_cartesian, stats)
             for br in chain
         ]
         ub = branches[0][0]
-        uvars = set(branches[0][1])
-        for df, vs in branches[1:]:
+        for df, _ in branches[1:]:
             ub = ub.unionByName(df, allowMissingColumns=True)
-            uvars |= vs
-        if acc is None:
-            acc, bound = ub, uvars
-        else:
-            shared = sorted(bound & uvars)
-            if not shared:
-                raise ValueError(
-                    "UNION block shares no variable with the bound "
-                    "solutions — a disconnected UNION is a cross product"
-                )
-            acc = acc.join(ub, on=shared, how="inner")
-            bound |= uvars
+        rels.append((ub, set().union(*(vs for _, vs in branches))))
     for sq in q.subqueries:
-        # SPARQL 1.1 subquery: evaluated bottom-up in isolation, then
-        # natural-joined with the group solutions — only its PROJECTED
-        # variables (and agg aliases) are in scope outside
+        # SPARQL 1.1 subquery: evaluated bottom-up in isolation — only
+        # its PROJECTED variables (and agg aliases) are in scope outside
         rel = compose(
             triples, sq, subj=subj, pred=pred, obj=obj,
             allow_cartesian=allow_cartesian,
             max_closure_rows=max_closure_rows, stats=stats,
             quads=quads, graph_col=graph_col,
         )
-        vs = set(rel.columns)
-        if acc is None:
-            acc, bound = rel, vs
-            continue
-        shared = sorted(vs & bound)
-        if not shared:
-            if not allow_cartesian:
-                raise ValueError(
-                    "subquery projects no variable shared with the "
-                    "outer group — a disconnected subquery is a cross "
-                    "product; pass allow_cartesian=True if intended"
-                )
-            acc = acc.crossJoin(rel)
-        else:
-            acc = acc.join(rel, on=shared, how="inner")
-        bound |= vs
+        rels.append((rel, set(rel.columns)))
+    acc, bound = _bgp._join_group(
+        rels, list(range(len(rels))), allow_cartesian, "query group"
+    )
+    if q.optional and not bound:
+        raise ValueError(
+            "optional groups cannot attach to a variable-free "
+            "(ASK-style) required block"
+        )
     for grp in q.optional:
         df, vs = _compile_group(t, grp, max_closure_rows, allow_cartesian,
                                 stats)
@@ -522,16 +503,7 @@ def compose_construct(
     BGP) to composed bodies, reusing its template fire. ``q`` must not
     carry aggregates or projection modifiers — CONSTRUCT binds
     template variables from raw solutions."""
-    from . import rules as _rules
-
-    if (
-        q.group_by or q.aggs or q.having or q.select is not None
-        or q.limit is not None or q.offset is not None
-    ):
-        raise ValueError(
-            "CONSTRUCT takes raw solutions: strip group_by/aggs/having/"
-            "select/offset/limit from the query"
-        )
+    _check_raw_solutions(q, "CONSTRUCT")
     for h in heads:
         if len(h) != 3:
             raise ValueError(f"head template must be a triple: {h!r}")
@@ -540,12 +512,37 @@ def compose_construct(
         allow_cartesian=allow_cartesian, max_closure_rows=max_closure_rows,
         stats=stats, quads=quads, graph_col=graph_col,
     )
-    head_vars = {t[1:] for h in heads for t in h if _bgp._is_var(t)}
-    missing = sorted(head_vars - set(sols.columns))
+    return _fire_templates(sols, tuple(tuple(h) for h in heads), "CONSTRUCT")
+
+
+def _check_raw_solutions(q: KGQuery, what: str) -> None:
+    """CONSTRUCT and UPDATE templates bind from raw solutions: reject a
+    WHERE query carrying aggregates or projection modifiers."""
+    if (
+        q.group_by or q.aggs or q.having or q.select is not None
+        or q.limit is not None or q.offset is not None
+    ):
+        raise ValueError(
+            f"{what} templates bind from raw solutions: strip group_by/"
+            "aggs/having/select/offset/limit from the WHERE query"
+        )
+
+
+def _fire_templates(sols: DataFrame, templates: tuple, what: str) -> DataFrame:
+    """Instantiate every (s, p, o) template per solution -> the
+    solution-sized distinct (subj, pred, obj) set. Template variables
+    must be bound by the solutions; instantiations with a NULL slot
+    (an unmatched OPTIONAL variable) are skipped, per the SPARQL
+    incomplete-triple rule."""
+    from . import rules as _rules
+
+    tvars = {x[1:] for tp in templates for x in tp if _bgp._is_var(x)}
+    missing = sorted(tvars - set(sols.columns))
     if missing:
-        raise ValueError(f"head variables not bound by the query: {missing}")
-    out = _rules._fire(sols, tuple(tuple(h) for h in heads))
-    return out.filter(
+        raise ValueError(
+            f"{what} template variables not bound by WHERE: {missing}"
+        )
+    return _rules._fire(sols, templates).filter(
         F.col("subj").isNotNull()
         & F.col("pred").isNotNull()
         & F.col("obj").isNotNull()

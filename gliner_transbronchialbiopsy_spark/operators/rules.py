@@ -19,8 +19,9 @@ rules: "IF a doc mentions engine ?e AND op ?op THEN assert (?e runs
 
 Distributed shape per round: each rule body is a chain of equi-joins
 on shared variables (greedy connected order, constants pushed into
-the atom scans — bgp._join_group, the planner bgp_match runs, fed
-per-atom delta/full scans); the delta swap
+the atom scans — bgp._join_group, the one planner of the KG query
+layer: round one compiles the body with bgp_match, i.e. the composer,
+later rounds feed it per-atom delta/full scans); the delta swap
 multiplies that by the number of body atoms but each variant joins a
 (small) delta against the indexed full relation, which AQE broadcasts
 when it fits. New facts are diffed against the known set with ONE
@@ -70,6 +71,22 @@ class Rule:
                     raise ValueError(
                         f"unsafe rule: head variable {t} not bound in body"
                     )
+        # the variable atoms must form one connected component: a rule
+        # has no allow_cartesian, and a disconnected body is a cross
+        # product (ground atoms are existence gates and join nothing)
+        pending = [
+            {t for t in pat if _bgp._is_var(t)} for pat in self.body
+        ]
+        pending = [vs for vs in pending if vs]
+        comp = pending.pop(0) if pending else set()
+        while nxt := next((vs for vs in pending if vs & comp), None):
+            comp |= nxt
+            pending.remove(nxt)
+        if pending:
+            raise ValueError(
+                f"disconnected rule body: atoms binding {sorted(comp)} "
+                "share no variable with the rest of the body"
+            )
 
 
 def rule(body: Sequence[tuple], head: Sequence[tuple], name: str = "") -> Rule:

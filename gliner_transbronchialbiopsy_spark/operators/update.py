@@ -59,7 +59,6 @@ from pyspark.sql import functions as F
 from . import bgp as _bgp
 from . import composer as _composer
 from . import paths as _paths
-from . import rules as _rules
 
 
 def _check_templates(templates, what: str) -> tuple:
@@ -72,18 +71,6 @@ def _check_templates(templates, what: str) -> tuple:
             )
         out.append(tuple(t))
     return tuple(out)
-
-
-def _instantiate(sols: DataFrame, templates: tuple) -> DataFrame:
-    """Fire every template per solution -> solution-sized distinct
-    (subj, pred, obj) set; NULL-slotted instantiations are skipped
-    (the SPARQL incomplete-triple rule for unmatched OPTIONALs)."""
-    out = _rules._fire(sols, templates)
-    return out.filter(
-        F.col("subj").isNotNull()
-        & F.col("pred").isNotNull()
-        & F.col("obj").isNotNull()
-    ).distinct()
 
 
 def _ground_rows(spark, templates: tuple) -> DataFrame:
@@ -125,10 +112,11 @@ def update_apply(
         F.col(pred).alias("pred"),
         F.col(obj).alias("obj"),
     )
-    tvars = {
-        x[1:] for tp in (*delete, *insert) for x in tp if _bgp._is_var(x)
-    }
     if where is None:
+        tvars = {
+            x[1:] for tp in (*delete, *insert) for x in tp
+            if _bgp._is_var(x)
+        }
         if tvars:
             raise ValueError(
                 f"DATA forms take ground triples only; variables "
@@ -138,28 +126,18 @@ def update_apply(
         d_set = _ground_rows(spark, delete) if delete else None
         i_set = _ground_rows(spark, insert) if insert else None
     else:
-        if (
-            where.group_by or where.aggs or where.having
-            or where.select is not None or where.limit is not None
-            or where.offset is not None
-        ):
-            raise ValueError(
-                "UPDATE templates bind from raw solutions: strip "
-                "group_by/aggs/having/select/offset/limit from WHERE"
-            )
+        _composer._check_raw_solutions(where, "UPDATE")
         sols = _composer.compose(
             triples, where, subj=subj, pred=pred, obj=obj,
             allow_cartesian=allow_cartesian,
             max_closure_rows=max_closure_rows, stats=stats,
             quads=quads, graph_col=graph_col,
         )
-        missing = sorted(tvars - set(sols.columns))
-        if missing:
-            raise ValueError(
-                f"template variables not bound by WHERE: {missing}"
-            )
-        d_set = _instantiate(sols, delete) if delete else None
-        i_set = _instantiate(sols, insert) if insert else None
+        # the WHERE is composed once: DELETE and INSERT fire from the
+        # same solutions
+        fire = _composer._fire_templates
+        d_set = fire(sols, delete, "DELETE") if delete else None
+        i_set = fire(sols, insert, "INSERT") if insert else None
 
     surviving = (
         t.join(d_set, ["subj", "pred", "obj"], "left_anti")

@@ -176,6 +176,122 @@ def test_union_branches_join_where_block(spark, kg):
     ]
 
 
+def _match(rows, pattern):
+    """Plain-Python set-semantic match of one pattern over tuples ->
+    distinct binding dicts."""
+    out = []
+    for row in rows:
+        b = {}
+        if all(
+            (b.setdefault(term[1:], val) == val) if term.startswith("?")
+            else term == val
+            for term, val in zip(pattern, row)
+        ) and b not in out:
+            out.append(b)
+    return out
+
+
+def _join(left, right):
+    """Plain-Python natural join of two bags of binding dicts (a cross
+    product when they share no variable)."""
+    return [
+        {**a, **b} for a in left for b in right
+        if all(a[k] == b[k] for k in a.keys() & b.keys())
+    ]
+
+
+def _quads(kg):
+    # one named graph per document: its assertions
+    return [(f"g_{s}", s, p, o) for s, p, o in kg if s.startswith("d")]
+
+
+def _case_union_cartesian(kg):
+    q = KGQuery(
+        where=(("?doc", "engine", "?eng"),),
+        union=(
+            (("?x", "subclass_of", "kg_term"),),
+            (("?x", "subclass_of", "operation"),),
+        ),
+    )
+    branches = _match(kg, ("?x", "subclass_of", "kg_term")) + _match(
+        kg, ("?x", "subclass_of", "operation")
+    )
+    return q, True, _join(_match(kg, ("?doc", "engine", "?eng")), branches)
+
+
+def _case_subquery_links_union(kg):
+    # the UNION binds only ?op; the later subquery projects (eng, op)
+    # and connects it to the where block
+    sub = KGQuery(
+        where=(("?d", "engine", "?eng"), ("?d", "exec_op", "?op")),
+        select=("eng", "op"),
+        distinct=True,
+    )
+    q = KGQuery(
+        where=(("?doc", "engine", "?eng"),),
+        union=((("?op", "a", "exec_op"),), (("?op", "a", "data_noun"),)),
+        subqueries=(sub,),
+    )
+    docs = _join(
+        _match(kg, ("?d", "engine", "?eng")),
+        _match(kg, ("?d", "exec_op", "?op")),
+    )
+    pairs = []
+    for b in docs:
+        if {"eng": b["eng"], "op": b["op"]} not in pairs:
+            pairs.append({"eng": b["eng"], "op": b["op"]})
+    ops = _match(kg, ("?op", "a", "exec_op")) + _match(
+        kg, ("?op", "a", "data_noun")
+    )
+    engines = _match(kg, ("?doc", "engine", "?eng"))
+    return q, False, _join(_join(engines, ops), pairs)
+
+
+def _case_ground_where_gates_graph(gate):
+    def case(kg):
+        q = KGQuery(
+            where=(gate,),
+            graphs=(("?g", (("?d", "engine", "?e"),)),),
+        )
+        want = (
+            _match(_quads(kg), ("?g", "?d", "engine", "?e"))
+            if gate in kg else []
+        )
+        return q, False, want
+    return case
+
+
+@pytest.mark.parametrize(
+    "case",
+    [
+        _case_union_cartesian,
+        _case_subquery_links_union,
+        _case_ground_where_gates_graph(("d1", "engine", "spark")),
+        _case_ground_where_gates_graph(("d1", "engine", "hash")),
+    ],
+    ids=["union-cartesian", "subquery-links-union", "ground-gate-hit",
+         "ground-gate-miss"],
+)
+def test_required_blocks_form_one_join_step(spark, kg, case):
+    """where, GRAPH, UNION and subquery blocks join in one planner
+    step: out of written order when a later block connects them, as a
+    cross product with allow_cartesian, and with a variable-free
+    where as an existence gate."""
+    q, allow_cartesian, want = case(kg)
+    quads = spark.createDataFrame(
+        _quads(kg), "g string, subj string, pred string, obj string"
+    )
+    got = composer.compose(
+        _triples(spark, kg), q, allow_cartesian=allow_cartesian, quads=quads
+    )
+    cols = sorted(got.columns)
+    if want:
+        assert cols == sorted(want[0])
+    assert sorted(tuple(r[c] for c in cols) for r in got.collect()) == sorted(
+        tuple(b[c] for c in cols) for b in want
+    )
+
+
 def test_aggregates_match_manual_groupby(spark, kg):
     t = _triples(spark, kg)
     base = bgp.bgp_match(
@@ -269,7 +385,7 @@ def test_error_cases(spark, kg):
                 optional=((("?x", "exec_op", "?y"),),),
             ),
         )
-    with pytest.raises(ValueError, match="UNION"):
+    with pytest.raises(ValueError, match="disconnected"):
         composer.compose(
             t,
             KGQuery(

@@ -126,6 +126,9 @@ def test_bgp_all_ground_ask(spark):
         t, [("d1", "engine", "spark"), ("d1", "exec_op", "sort")]
     )
     assert no.count() == 0
+    # an ASK-only match still applies its group modifiers
+    gated = bgp.bgp_match(t, [("d1", "engine", "spark")], filters=["1 = 0"])
+    assert gated.count() == 0
     with pytest.raises(ValueError, match="variable-free"):
         bgp.bgp_match(
             t, [("d1", "engine", "spark")], optional=[("?d", "exec_op", "?o")]

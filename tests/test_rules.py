@@ -99,6 +99,20 @@ def test_unsafe_and_malformed_rules_raise(spark):
             t, [rules.rule([("?a", "p", "?b"), ("?c", "q", "?d")],
                            [("?a", "r", "?c")])]
         )
+    # rejected when the rule is built, with no hint at an option the
+    # rule API does not have; ground atoms are existence gates and
+    # connect nothing
+    with pytest.raises(ValueError, match="disconnected rule body"):
+        rules.rule([("?a", "p", "?b"), ("?c", "q", "?d")], [("?a", "r", "?c")])
+    with pytest.raises(ValueError, match="disconnected rule body"):
+        rules.rule(
+            [("?a", "p", "?b"), ("b", "q", "c"), ("?c", "q", "?d")],
+            [("?a", "r", "?c")],
+        )
+    rules.rule(
+        [("?a", "p", "?b"), ("b", "q", "c"), ("?b", "q", "?d")],
+        [("?a", "r", "?d")],
+    )
 
 
 def test_max_rounds_guard(spark):

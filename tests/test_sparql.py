@@ -575,7 +575,7 @@ def test_exec_subquery_only_body(spark, kg):
 
 def test_subquery_disconnected_raises(spark, kg):
     t = _triples(spark, kg)
-    with pytest.raises(ValueError, match="subquery projects no variable"):
+    with pytest.raises(ValueError, match="disconnected"):
         sparql.sparql(
             t,
             "SELECT ?x WHERE { ?x exec_op ?w "
