@@ -468,8 +468,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     the WHOLE LSH pipeline (signatures -> banding -> 64-row bucket cap
     -> candidate self-join -> estimated Jaccard) restatable in DuckDB,
     so this query carries a full value oracle instead of a rows-only
-    check. The xxhash64 family remains the production default (bench.py
-    times it through the same dedup_minhash_query body)."""
+    check. The production default is the numpy FNV-1a + splitmix64
+    family of linking.minhash_signatures_np (bench.py times it through
+    the same dedup_minhash_query body)."""
     return dedup_minhash_query(spark, sf_dir, portable_hash=True)
 
 

@@ -135,10 +135,11 @@ def minhash_near_duplicates(
     (id_a, id_b, jaccard).
 
     portable_hash=True derives the shingle-hash family from sha256
-    (linking.portable_hash60) instead of xxhash64, making the full
-    pipeline — signatures, banding, bucket cap, estimate — restatable
-    in DuckDB SQL for oracle verification. xxhash64 stays the
-    production default (JVM intrinsic, no sha round per shingle).
+    (linking.portable_hash60), making the full pipeline — signatures,
+    banding, bucket cap, estimate — restatable in DuckDB SQL for
+    oracle verification. The production default is
+    linking.minhash_signatures_np: a numpy FNV-1a shingle fold with
+    splitmix64 lanes (no sha round per shingle).
 
     Default verification is the MinHash ESTIMATE (equal-slot fraction,
     std err ~1/sqrt(num_hashes)) — no per-pair array work, which is

@@ -1,5 +1,12 @@
 """Graph analytics over materialized KG triples: deterministic
-fixed-point PageRank as an iterative DataFrame loop.
+fixed-point PageRank and the other iterative DataFrame loops
+(traversals, SCC, peeling, walks, MST).
+
+The traversals — reachable, pivot_distances, the Brandes forward pass
+of betweenness_estimate, shortest_paths, temporal_reachable, and the
+coloring, membership and level rounds of scc / condensation_levels —
+each supply one round step to :func:`loops.frontier`, the one
+delta-loop driver; kcore and ktruss share one peel loop.
 
 Why fixed-point: float PageRank is not reproducible on a cluster —
 groupBy partial-aggregation order changes between runs and between
@@ -32,10 +39,12 @@ a principled graph centrality over the emitted triples.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .loops import loop_ckpt
+from .loops import frontier, loop_ckpt
 
 #: rank unit = 1/SCALE; total mass starts at ~SCALE. 1e9 leaves
 #: rank * weight products far inside long range (rank <= ~1e9,
@@ -331,6 +340,32 @@ def adamic_adar(
     ).limit(int(k))
 
 
+def _peel_rounds(
+    cur: DataFrame,
+    peel: Callable[[DataFrame], DataFrame],
+    rounds: int | None,
+    max_rounds: int,
+    name: str,
+) -> DataFrame:
+    """The synchronous peel loop of kcore and ktruss: exactly
+    ``rounds`` peels, or (rounds=None) peel until the surviving-edge
+    count stops changing, raising past ``max_rounds``."""
+    if rounds is not None:
+        for _ in range(int(rounds)):
+            cur = peel(cur)
+        return cur
+    n_edges = cur.count()
+    for _ in range(max_rounds):
+        if n_edges == 0:
+            return cur
+        cur = peel(cur)
+        n_next = cur.count()
+        if n_next == n_edges:
+            return cur
+        n_edges = n_next
+    raise RuntimeError(f"{name} did not converge within {max_rounds} rounds")
+
+
 def kcore(
     edges: DataFrame,
     k: int,
@@ -385,23 +420,7 @@ def kcore(
             .join(keep.select(F.col("_a").alias("_b")), "_b", "left_semi")
         )
 
-    if rounds is not None:
-        for _ in range(int(rounds)):
-            cur = _peel(cur)
-    else:
-        n_edges = cur.count()
-        for _ in range(max_rounds):
-            if n_edges == 0:
-                break
-            cur = _peel(cur)
-            n_next = cur.count()
-            if n_next == n_edges:
-                break
-            n_edges = n_next
-        else:
-            raise RuntimeError(
-                f"kcore did not converge within {max_rounds} rounds"
-            )
+    cur = _peel_rounds(cur, _peel, rounds, max_rounds, "kcore")
     return (
         cur.groupBy(F.col("_a").alias("node"))
         .agg(F.count("*").alias("degree"))
@@ -564,13 +583,9 @@ def reachable(
     it must run as synchronous frontier rounds, never a transitive
     closure materialization.
 
-    Iteration shape (the loop discipline shared with components.py and
-    pagerank): per round, ONLY the new frontier (nodes first reached
-    last round) joins the edge table — visited nodes never rejoin — so
-    total join work is O(edges-touched), the Bellman-Ford-free BFS
-    bound. A left_anti against the visited set keeps frontiers
-    shrinking; localCheckpoint per round keeps the plan O(1) deep and
-    cuts lineage (at cluster scale: checkpoint to HDFS instead). Early
+    Iteration shape: :func:`loops.frontier` in first-reach mode — per
+    round ONLY the new frontier joins the edge table, so total join
+    work is O(edges-touched), the Bellman-Ford-free BFS bound. Early
     exit when the frontier empties — max_hops is a cap, not a fixed
     round count.
 
@@ -587,26 +602,19 @@ def reachable(
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
     e = edges.select(F.col(src).alias("_e_src"), F.col(dst).alias("_e_dst")).distinct()
-    visited = loop_ckpt(
-        sources.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0))
-    )
-    frontier = visited
-    for d in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_e_src"])
+
+    def _step(front: DataFrame, d: int) -> DataFrame:
+        return (
+            front.join(e, front["node"] == e["_e_src"])
             .select(F.col("_e_dst").alias("node"))
             .distinct()
-            .join(visited.select("node"), "node", "left_anti")
             .withColumn("dist", F.lit(d))
         )
-        nxt = loop_ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        visited = loop_ckpt(visited.unionAll(nxt))
-        frontier = nxt
-    return visited
+
+    seed = sources.select(F.col(node).alias("node")).distinct().withColumn(
+        "dist", F.lit(0)
+    )
+    return frontier(seed, _step, ["node"], max_hops)[0]
 
 
 def infer_types(
@@ -685,16 +693,14 @@ def shortest_paths(
     minimum total edge weight over such paths (weight=None treats
     every edge as 1, reducing to :func:`reachable`'s BFS distance).
 
-    This is Bellman-Ford with the frontier discipline of the module's
-    other loops: per round, ONLY nodes whose distance improved last
-    round rejoin the edge table; a min-aggregate per destination and a
-    strictly-less join against the running best keep the frontier
-    shrinking toward a fixed point, with early exit when a round
-    improves nothing. Hop-bounding makes the semantics total on ANY
-    long weights (negative edges included — a negative cycle cannot
-    loop because paths are capped at max_hops edges), and integer
-    sums keep results bit-identical at any parallelism and in the
-    DuckDB oracle's recursive CTE.
+    This is Bellman-Ford on :func:`loops.frontier` with a strictly-less
+    admission: per round ONLY nodes whose distance improved last round
+    rejoin the edge table (one min-aggregate per destination), with
+    early exit when a round improves nothing. Hop-bounding makes the
+    semantics total on ANY long weights (negative edges included — a
+    negative cycle cannot loop because paths are capped at max_hops
+    edges), and integer sums keep results bit-identical at any
+    parallelism and in the DuckDB oracle's recursive CTE.
 
     Returns (node, dist) with dist a long; sources sit at dist 0
     unless a shorter (negative) path overtakes them within the bound.
@@ -710,35 +716,20 @@ def shortest_paths(
         .groupBy("_e_src", "_e_dst")
         .agg(F.min("_w").alias("_w"))
     )
-    best = loop_ckpt(
-        sources.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
+
+    def _step(front: DataFrame, _r: int) -> DataFrame:
+        return (
+            front.join(e, front["node"] == e["_e_src"])
+            .groupBy(F.col("_e_dst").alias("node"))
+            .agg(F.min(F.col("dist") + F.col("_w")).alias("dist"))
+        )
+
+    seed = sources.select(F.col(node).alias("node")).distinct().withColumn(
+        "dist", F.lit(0).cast("long")
     )
-    frontier = best
-    for _ in range(max_hops):
-        cand = (
-            frontier.join(e, frontier["node"] == e["_e_src"])
-            .select(
-                F.col("_e_dst").alias("node"),
-                (F.col("dist") + F.col("_w")).alias("_cand"),
-            )
-            .groupBy("node")
-            .agg(F.min("_cand").alias("_cand"))
-        )
-        improved = loop_ckpt(
-            cand.join(best, "node", "left")
-            .filter(F.col("dist").isNull() | (F.col("_cand") < F.col("dist")))
-            .select("node", F.col("_cand").alias("dist"))
-        )
-        if improved.isEmpty():
-            break
-        best = loop_ckpt(
-            best.join(improved.select("node"), "node", "left_anti")
-            .unionAll(improved)
-        )
-        frontier = improved
-    return best
+    return frontier(
+        seed, _step, ["node"], max_hops, better=lambda n, o: n < o
+    )[0]
 
 
 def infer_domain_range(
@@ -978,13 +969,12 @@ def scc(
        count is bounded by the condensation's level count, not node
        count.
 
-    Loop discipline as everywhere in this module: loop_ckpt per round
-    (O(1) plan depth), one bounded isEmpty()/count scalar per round,
-    RuntimeError past the shared ``max_rounds`` budget (counted across
-    ALL inner rounds, so a pathological chain cannot spin the color
-    fixpoint unbounded). Node ids are compared with max/>, so any
-    orderable id type works; results are set-semantic and
-    parallelism-invariant, restatable in DuckDB as mutual
+    Steps 1 and 2 are :func:`loops.frontier` rounds (max and first
+    reach); RuntimeError past the shared ``max_rounds`` budget
+    (counted across ALL inner rounds, so a pathological chain cannot
+    spin the color fixpoint unbounded). Node ids are compared with
+    max/>, so any orderable id type works; results are set-semantic
+    and parallelism-invariant, restatable in DuckDB as mutual
     reachability over a recursive closure (the contract oracle).
     """
     e0 = (
@@ -1014,60 +1004,37 @@ def scc(
 
     while not rem_n.isEmpty():
         _tick("outer peel")
+
         # 1. forward max-label fixpoint, frontier-only
-        color = loop_ckpt(rem_n.withColumn("color", F.col("node")))
-        delta = color
-        while True:
+        def _color(delta: DataFrame, _r: int) -> DataFrame:
             _tick("color fixpoint")
-            cand = (
+            return (
                 delta.join(rem_e, delta["node"] == rem_e["_s"])
                 .groupBy(F.col("_d").alias("node"))
-                .agg(F.max("color").alias("cand"))
+                .agg(F.max("color").alias("color"))
             )
-            improved = (
-                cand.join(color, "node")
-                .filter(F.col("cand") > F.col("color"))
-                .select("node", F.col("cand").alias("color"))
-                .transform(loop_ckpt)
-            )
-            if improved.isEmpty():
-                break
-            color = (
-                color.join(
-                    improved.withColumnRenamed("color", "_new"),
-                    "node",
-                    "left",
-                )
-                .select(
-                    "node",
-                    F.coalesce("_new", "color").alias("color"),
-                )
-                .transform(loop_ckpt)
-            )
-            delta = improved
+
+        color = frontier(
+            rem_n.withColumn("color", F.col("node")), _color, ["node"],
+            max_rounds, better=lambda n, o: n > o,
+        )[0]
+
         # 2. backward membership sweep from all roots, same-color only
-        members = loop_ckpt(
-            color.filter(F.col("node") == F.col("color"))
-        )
-        front = members
-        while True:
+        def _sweep(front: DataFrame, _r: int) -> DataFrame:
             _tick("membership sweep")
-            step = (
+            return (
                 front.join(rem_e, front["node"] == rem_e["_d"])
                 .select(F.col("_s").alias("node"), "color")
                 .distinct()
-                .join(
-                    color.withColumnRenamed("color", "_c"), "node"
-                )
+                .join(color.withColumnRenamed("color", "_c"), "node")
                 .filter(F.col("color") == F.col("_c"))
                 .select("node", "color")
-                .join(members.select("node"), "node", "left_anti")
-                .transform(loop_ckpt)
             )
-            if step.isEmpty():
-                break
-            members = loop_ckpt(members.unionAll(step))
-            front = step
+
+        members = frontier(
+            color.filter(F.col("node") == F.col("color")), _sweep, ["node"],
+            max_rounds,
+        )[0]
         chunk = members.select("node", F.col("color").alias("scc_id"))
         assigned = (
             chunk if assigned is None else loop_ckpt(assigned.unionAll(chunk))
@@ -1109,12 +1076,11 @@ def condensation_levels(
 
     Plan shape: scc() assigns components; super-edges are two hash
     joins of the edge table against the (node -> scc_id) map plus a
-    distinct (self-loops dropped); levels run the same frontier-only
-    max-propagation loop as scc()'s coloring — only super-nodes whose
-    level improved last round push candidates, loop_ckpt per round,
-    one bounded isEmpty() scalar per round, RuntimeError past
-    ``max_rounds`` (which bounds CONDENSATION DEPTH — at 200 it
-    exceeds any real dependency graph's strata count). Restated in
+    distinct (self-loops dropped); levels run the same
+    :func:`loops.frontier` max-propagation as scc()'s coloring,
+    RuntimeError past ``max_rounds`` (which bounds CONDENSATION
+    DEPTH — at 200 it exceeds any real dependency graph's strata
+    count). Restated in
     DuckDB as mutual-reachability SCCs + a recursive distinct
     (node, length) path-length enumeration with a max() roll-up.
     """
@@ -1134,41 +1100,25 @@ def condensation_levels(
         .distinct()
     )
     sizes = comp.groupBy("scc_id").agg(F.count(F.lit(1)).alias("n_nodes"))
-    level = loop_ckpt(
-        sizes.select("scc_id", F.lit(0).alias("level"))
-    )
-    delta = level
-    for _ in range(max_rounds + 1):
-        cand = (
+
+    def _step(delta: DataFrame, _r: int) -> DataFrame:
+        return (
             delta.join(se, delta["scc_id"] == se["_from"])
             .groupBy(F.col("_to").alias("scc_id"))
-            .agg((F.max("level") + F.lit(1)).alias("cand"))
+            .agg((F.max("level") + F.lit(1)).alias("level"))
         )
-        improved = (
-            cand.join(level, "scc_id")
-            .filter(F.col("cand") > F.col("level"))
-            .select("scc_id", F.col("cand").alias("level"))
-            .transform(loop_ckpt)
-        )
-        if improved.isEmpty():
-            return sizes.join(level, "scc_id").select(
-                "scc_id", "n_nodes", "level"
-            )
-        level = (
-            level.join(
-                improved.withColumnRenamed("level", "_new"), "scc_id", "left"
-            )
-            .select(
-                "scc_id", F.coalesce("_new", "level").alias("level")
-            )
-            .transform(loop_ckpt)
-        )
-        delta = improved
-    raise RuntimeError(
-        f"condensation_levels did not converge within {max_rounds} "
-        "rounds — the condensation is deeper than the budget (or the "
-        "input is not the graph you think it is)"
+
+    level, converged = frontier(
+        sizes.select("scc_id", F.lit(0).alias("level")), _step, ["scc_id"],
+        max_rounds + 1, better=lambda n, o: n > o,
     )
+    if not converged:
+        raise RuntimeError(
+            f"condensation_levels did not converge within {max_rounds} "
+            "rounds — the condensation is deeper than the budget (or the "
+            "input is not the graph you think it is)"
+        )
+    return sizes.join(level, "scc_id").select("scc_id", "n_nodes", "level")
 
 
 def pivot_distances(
@@ -1187,43 +1137,48 @@ def pivot_distances(
     (pivot, node), so k pivot BFS trees run in the same synchronous
     rounds (k× the join work of one BFS, never k separate jobs).
     That per-source relation is what pivot-sampling estimators
-    (centrality, diameter probes) consume. Same loop discipline as
-    reachable: frontier-only joins, left_anti against the visited
-    set, localCheckpoint per round, early exit on an empty frontier.
-    Pivots sit at dist 0 from themselves."""
+    (centrality, diameter probes) consume. Same
+    :func:`loops.frontier` first-reach rounds as reachable. Pivots sit
+    at dist 0 from themselves."""
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
     e = edges.select(
         F.col(src).alias("_e_src"), F.col(dst).alias("_e_dst")
     ).distinct()
-    visited = loop_ckpt(
+
+    def _step(front: DataFrame, d: int) -> DataFrame:
+        return (
+            front.join(e, front["node"] == e["_e_src"])
+            .select("pivot", F.col("_e_dst").alias("node"))
+            .distinct()
+            .withColumn("dist", F.lit(d))
+        )
+
+    seed = (
         pivots.select(F.col(node).alias("pivot"))
         .distinct()
         .select("pivot", F.col("pivot").alias("node"))
         .withColumn("dist", F.lit(0))
     )
-    frontier = visited
-    for d in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_e_src"])
-            .select("pivot", F.col("_e_dst").alias("node"))
-            .distinct()
-            .join(
-                visited.select("pivot", "node"),
-                ["pivot", "node"],
-                "left_anti",
-            )
-            .withColumn("dist", F.lit(d))
-        )
-        nxt = loop_ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        visited = loop_ckpt(visited.unionAll(nxt))
-        frontier = nxt
-    return visited
+    return frontier(seed, _step, ["pivot", "node"], max_hops)[0]
 
 
 _CENT_SCALE = 1_000_000_000
+
+
+def _pivot_sample(e: DataFrame, s: str, d: str, n_pivots: int) -> DataFrame:
+    """The ``n_pivots`` endpoints of ``e`` minimal under
+    (sha256(node), node) -> (node): a portable uniform draw both
+    engines compute identically (no RNG, no collect; the cut is a
+    TakeOrderedAndProject)."""
+    nodes = (
+        e.select(F.col(s).alias("node"))
+        .union(e.select(F.col(d).alias("node")))
+        .distinct()
+    )
+    return nodes.orderBy(
+        F.sha2(F.col("node").cast("string"), 256).asc(), F.col("node").asc()
+    ).limit(int(n_pivots))
 
 
 def centrality_estimate(
@@ -1266,14 +1221,7 @@ def centrality_estimate(
     e = edges.select(
         F.col(src).alias("src"), F.col(dst).alias("dst")
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
-    pivots = nodes.orderBy(
-        F.sha2(F.col("node").cast("string"), 256).asc(), F.col("node").asc()
-    ).limit(int(n_pivots))
+    pivots = _pivot_sample(e, "src", "dst", n_pivots)
     pd_ = pivot_distances(e, pivots, max_hops=max_hops)
     scale = F.lit(_CENT_SCALE).cast("long")
     return (
@@ -1399,11 +1347,9 @@ def temporal_reachable(
     A_h(v) = min(A_{h-1}(v), min{t of (u,v,t): t >= A_{h-1}(u)})
     converges to the hop-bounded optimum — no per-walk enumeration.
 
-    Iteration shape (the BFS/Bellman-Ford loop discipline of
-    :func:`reachable` / weighted_paths): per round only the IMPROVED
-    frontier joins the edge table, one min-agg keyed on dst, one
-    left join against the best table to keep strict improvements,
-    localCheckpoint per round, early exit when nothing improves.
+    Iteration shape: :func:`loops.frontier` with a strictly-less
+    admission, as in :func:`shortest_paths` — per round only the
+    IMPROVED frontier joins the edge table, one min-agg keyed on dst.
     Timestamps are totally ordered, so results are set-semantic and
     parallelism-invariant, restatable as a recursive CTE with a
     min(arrival) roll-up. Sources sit at ``start``; parallel temporal
@@ -1419,54 +1365,24 @@ def temporal_reachable(
         F.col(dst).alias("_e_dst"),
         F.col(time).alias("_e_t"),
     ).filter(F.col("_e_t").isNotNull())
-    best = loop_ckpt(
-        sources.select(F.col(node).alias("node"))
-        .distinct()
-        .withColumn("arrival", start_col)
-    )
-    frontier = best
-    for _ in range(max_hops):
-        relax = (
-            frontier.join(
+
+    def _step(front: DataFrame, _r: int) -> DataFrame:
+        return (
+            front.join(
                 e,
-                (frontier["node"] == e["_e_src"])
-                & (e["_e_t"] >= frontier["arrival"]),
+                (front["node"] == e["_e_src"])
+                & (e["_e_t"] >= front["arrival"]),
             )
             .groupBy(F.col("_e_dst").alias("node"))
-            .agg(F.min("_e_t").alias("_new"))
+            .agg(F.min("_e_t").alias("arrival"))
         )
-        improved = (
-            relax.join(best, "node", "left")
-            .filter(
-                F.col("arrival").isNull()
-                | (F.col("_new") < F.col("arrival"))
-            )
-            .select("node", F.col("_new").alias("arrival"))
-        )
-        improved = loop_ckpt(improved)
-        if improved.isEmpty():
-            break
-        best = loop_ckpt(
-            best.join(
-                improved.withColumnRenamed("arrival", "_new"),
-                "node",
-                "full_outer",
-            ).select(
-                "node",
-                F.when(
-                    F.col("_new").isNotNull()
-                    & (
-                        F.col("arrival").isNull()
-                        | (F.col("_new") < F.col("arrival"))
-                    ),
-                    F.col("_new"),
-                )
-                .otherwise(F.col("arrival"))
-                .alias("arrival"),
-            )
-        )
-        frontier = improved
-    return best
+
+    seed = sources.select(F.col(node).alias("node")).distinct().withColumn(
+        "arrival", start_col
+    )
+    return frontier(
+        seed, _step, ["node"], max_hops, better=lambda n, o: n < o
+    )[0]
 
 
 def betweenness_estimate(
@@ -1488,8 +1404,8 @@ def betweenness_estimate(
     count of shortest paths), accumulated per level as
     σ(v) = Σ_{u ∈ preds(v)} σ(u) — one frontier join + one sum-agg
     per hop, all k pivot trees sharing each round (the
-    :func:`pivot_distances` discipline). Backward phase: levels
-    processed deepest-first, δ(u) = Σ_{w ∈ succs(u)}
+    :func:`pivot_distances` rounds on :func:`loops.frontier`).
+    Backward phase: levels processed deepest-first, δ(u) = Σ_{w ∈ succs(u)}
     (σ_u · (SCALE + δ_fp(w))) div σ_w — Brandes' recurrence in exact
     long fixed-point (each node's δ is computed exactly ONCE, at its
     level round, so the integer divisions happen in a fixed order and
@@ -1511,42 +1427,23 @@ def betweenness_estimate(
     e = edges.select(
         F.col(src).alias("_e_src"), F.col(dst).alias("_e_dst")
     ).distinct()
-    nodes = (
-        e.select(F.col("_e_src").alias("node"))
-        .union(e.select(F.col("_e_dst").alias("node")))
-        .distinct()
-    )
-    pivots = nodes.orderBy(
-        F.sha2(F.col("node").cast("string"), 256).asc(), F.col("node").asc()
-    ).limit(int(n_pivots))
-    visited = loop_ckpt(
-        pivots.select(F.col("node").alias("pivot"))
-        .select(
-            "pivot",
-            F.col("pivot").alias("node"),
-            F.lit(0).alias("dist"),
-            F.lit(1).cast("long").alias("sigma"),
-        )
-    )
-    frontier = visited
-    for d in range(1, max_hops + 1):
-        nxt = (
-            frontier.join(e, frontier["node"] == e["_e_src"])
+    pivots = _pivot_sample(e, "_e_src", "_e_dst", n_pivots)
+
+    def _step(front: DataFrame, d: int) -> DataFrame:
+        return (
+            front.join(e, front["node"] == e["_e_src"])
             .groupBy("pivot", F.col("_e_dst").alias("node"))
             .agg(F.sum("sigma").alias("sigma"))
-            .join(
-                visited.select("pivot", "node"),
-                ["pivot", "node"],
-                "left_anti",
-            )
             .withColumn("dist", F.lit(d))
-            .select("pivot", "node", "dist", "sigma")
         )
-        nxt = loop_ckpt(nxt)
-        if nxt.isEmpty():
-            break
-        visited = loop_ckpt(visited.unionByName(nxt))
-        frontier = nxt
+
+    seed = pivots.select(
+        F.col("node").alias("pivot"),
+        F.col("node"),
+        F.lit(0).alias("dist"),
+        F.lit(1).cast("long").alias("sigma"),
+    )
+    visited = frontier(seed, _step, ["pivot", "node"], max_hops)[0]
     max_d = visited.agg(F.max("dist")).head()[0]  # one bounded scalar
     if max_d is None:
         # empty graph: no pivots, nothing reachable, no brokers
@@ -1878,23 +1775,7 @@ def ktruss(
         )
         return loop_ckpt(cur.join(keep, ["u", "v"], "left_semi"))
 
-    if rounds is not None:
-        for _ in range(int(rounds)):
-            cur = _peel(cur)
-    else:
-        n_edges = cur.count()
-        for _ in range(max_rounds):
-            if n_edges == 0:
-                break
-            cur = _peel(cur)
-            n_next = cur.count()
-            if n_next == n_edges:
-                break
-            n_edges = n_next
-        else:
-            raise RuntimeError(
-                f"ktruss did not converge within {max_rounds} rounds"
-            )
+    cur = _peel_rounds(cur, _peel, rounds, max_rounds, "ktruss")
     _, sup = _support_counts(cur, "u", "v")
     return cur.join(sup, ["u", "v"], "left").select(
         "u",

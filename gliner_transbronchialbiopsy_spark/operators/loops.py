@@ -1,4 +1,5 @@
-"""Round-boundary checkpointing for iterative DataFrame loops.
+"""Round-boundary checkpointing for iterative DataFrame loops, and the
+one frontier driver the graph traversals share.
 
 Every fixpoint loop in this engine (semi-naive rules, BFS frontiers,
 k-core peeling, Bellman-Ford relaxation, label propagation, PageRank,
@@ -43,11 +44,24 @@ explicit ``F.broadcast`` hints are unaffected.
 Spark upgrade could move it), so the rewrap is guarded: on any
 reflection failure the plain checkpointed frame is returned and the
 loop stays correct, merely slower past ~20 generations.
+
+:func:`frontier` is the delta-loop discipline written once: only the
+rows a round ADMITTED (first reached, or strictly improved) join the
+edges next round, the admitted set and the state each end the round
+in :func:`loop_ckpt`, and one bounded ``isEmpty()`` per round is the
+convergence test. BFS, per-pivot BFS, the Brandes forward pass,
+Bellman-Ford, temporal reach, the SCC coloring and membership rounds,
+condensation levels and seeded ``p+`` all run through it; the callers
+keep only their round step and their cap policy (silent hop cap, or
+raise on ``converged=False``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 
 
 def loop_ckpt(df: DataFrame) -> DataFrame:
@@ -66,3 +80,49 @@ def loop_ckpt(df: DataFrame) -> DataFrame:
         # private-API drift: fall back to the plain checkpoint —
         # correct, just exponential-prone past ~20 chained generations
         return ck
+
+
+def frontier(
+    seed: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    key: list[str],
+    max_rounds: int,
+    better: Callable[[Column, Column], Column] | None = None,
+) -> tuple[DataFrame, bool]:
+    """Run a frontier loop to its fixed point -> (state, converged).
+
+    ``seed`` is the round-0 state and the first frontier. Round r
+    (1-based) calls ``step(frontier, r)`` for candidate rows carrying
+    the state's columns, at most one row per ``key``. With
+    ``better=None`` a candidate is admitted when its key is not yet in
+    the state (first reach: one left_anti); otherwise the state has
+    one value column besides the key and ``better(new, old)`` decides
+    (``n < o`` keeps minima, ``n > o`` maxima), an admitted row
+    replacing its key's row. Only admitted rows form the next
+    frontier. ``converged`` is False when every one of the
+    ``max_rounds`` rounds admitted rows; the caller decides whether
+    that is a silent cap or an error."""
+    state = loop_ckpt(seed)
+    front = state
+    for r in range(1, max_rounds + 1):
+        cand = step(front, r)
+        if better is None:
+            admitted = cand.join(state.select(*key), key, "left_anti")
+        else:
+            (val,) = [c for c in state.columns if c not in key]
+            admitted = (
+                cand.withColumnRenamed(val, "_new")
+                .join(state, key, "left")
+                .filter(
+                    F.col(val).isNull() | better(F.col("_new"), F.col(val))
+                )
+                .select(*key, F.col("_new").alias(val))
+            )
+        admitted = loop_ckpt(admitted)
+        if admitted.isEmpty():
+            return state, True
+        if better is not None:
+            state = state.join(admitted.select(*key), key, "left_anti")
+        state = loop_ckpt(state.unionByName(admitted))
+        front = admitted
+    return state, False

@@ -33,7 +33,8 @@ closure step with :func:`graph.reachable` seeded at the bound end —
 frontier rounds touch O(edges) and never materialize the closure.
 ``plus`` raises if its inner relation exceeds ``max_closure_rows``
 unless the caller raises the cap, so a 10^12-triple graph cannot be
-closed by accident.
+closed by accident. The seeded evaluator :func:`path_reachable` runs
+its ``p+`` that way, as :func:`loops.frontier` rounds.
 
 Zero-length semantics (``opt``, and ``p*`` through it) follow the
 SPARQL spec: a zero-length path relates every graph TERM to itself,
@@ -52,7 +53,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .loops import loop_ckpt
+from .loops import frontier, loop_ckpt
 
 #: ``plus`` refuses to close a relation wider than this unless the
 #: caller raises the cap — closures are for schema-sized relations.
@@ -203,10 +204,9 @@ def path_reachable(
     - ``opt``           : seeds union one application (zero-or-one;
       ``p*`` = ``("opt", ("plus", p))``);
     - ``plus``          : BFS fixed point over the INNER path's image
-      function (visited-set left_anti, eager localCheckpoint per
-      round, early exit — the loop discipline of graph.reachable),
-      so ``p+`` over a 10^12-triple relation touches O(edges reached),
-      never O(closure).
+      function (:func:`loops.frontier` first-reach rounds, as in
+      graph.reachable), so ``p+`` over a 10^12-triple relation
+      touches O(edges reached), never O(closure).
 
     Returns the distinct image nodes as a one-column (``node``)
     DataFrame. ``max_hops`` bounds the plus loops (raises if still
@@ -273,22 +273,14 @@ def path_reachable(
             return s.unionAll(img(s, inner)).distinct()
         if op == "plus":
             (inner,) = args
-            frontier = loop_ckpt(img(s, inner))
-            visited = frontier
-            for _ in range(max_hops):
-                if frontier.isEmpty():
-                    return visited
-                nxt = loop_ckpt(
-                    img(frontier, inner)
-                    .join(visited, "node", "left_anti")
-                )
-                if nxt.isEmpty():
-                    return visited
-                visited = loop_ckpt(visited.unionAll(nxt))
-                frontier = nxt
-            raise ValueError(
-                f"plus image still growing after {max_hops} rounds"
+            visited, converged = frontier(
+                img(s, inner), lambda f, _r: img(f, inner), ["node"], max_hops
             )
+            if not converged:
+                raise ValueError(
+                    f"plus image still growing after {max_hops} rounds"
+                )
+            return visited
         raise ValueError(f"unknown path operator {op!r} in {sp!r}")
 
     return img(seeds, spec)

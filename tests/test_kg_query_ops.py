@@ -892,6 +892,10 @@ def test_path_reachable_plus_and_star_on_chain_with_cycle(spark):
     seeds = _sources(spark, ["a"])
     plus = paths.path_reachable(t, seeds, ("plus", ("pred", "p")))
     assert {r["node"] for r in plus.collect()} == {"a", "b", "c"}
+    # the max_hops rail: a chain a -> ... -> f still grows after 2 rounds
+    chain = _triples(spark, [(a, "p", b) for a, b in zip("abcde", "bcdef")])
+    with pytest.raises(ValueError, match="still growing"):
+        paths.path_reachable(chain, seeds, ("plus", ("pred", "p")), max_hops=2)
     # star keeps the seed even when it has no edges
     t2 = _triples(spark, [("x", "p", "y")])
     star = paths.path_reachable(

@@ -5,6 +5,7 @@ cases are deterministic but unbiased by hand-picked fixtures)."""
 import math
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from gliner_transbronchialbiopsy_spark.operators import (
@@ -106,6 +107,15 @@ def test_ktruss_fixed_rounds_matches_fixed_point(spark):
     )
     want = sorted((a, b, 2) for a, b in k4)
     assert exact == fixed == want
+    # the 4-truss of this graph is empty, but peeling it takes more
+    # than one round, so max_rounds=1 must raise
+    two_wedges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("a", "c"), ("c", "d"), ("b", "d"),
+         ("d", "e"), ("c", "e")],
+        "src string, dst string",
+    )
+    with pytest.raises(RuntimeError, match="ktruss did not converge"):
+        graph.ktruss(two_wedges, k=4, max_rounds=1)
 
 
 def test_ktruss_contract_rounds_margin(spark):
@@ -480,6 +490,14 @@ def test_scc_edge_cases(spark):
     )
     got = {r["node"]: r["scc_id"] for r in graph.scc(dag).collect()}
     assert got == {"a": "a", "b": "b", "c": "c"}
+    # n9 -> ... -> n0 colors every node n9 in nine rounds: a budget of
+    # three rounds (shared by peel, coloring and sweep) must raise
+    chain = spark.createDataFrame(
+        [(f"n{i}", f"n{i - 1}") for i in range(9, 0, -1)],
+        "src string, dst string",
+    )
+    with pytest.raises(RuntimeError, match="scc did not converge"):
+        graph.scc(chain, max_rounds=3).collect()
 
 
 def test_condensation_levels_match_python(spark):
@@ -539,6 +557,15 @@ def test_condensation_levels_match_python(spark):
         df = spark.createDataFrame(es, "src string, dst string")
         got = {tuple(r) for r in graph.condensation_levels(df).collect()}
         assert got == reference(es)
+    # c0 -> ... -> c9 is nine levels deep; scc() converges within the
+    # same budget of five, so the error is the level loop's own
+    chain = spark.createDataFrame(
+        [(f"c{i}", f"c{i + 1}") for i in range(9)], "src string, dst string"
+    )
+    with pytest.raises(
+        RuntimeError, match="condensation_levels did not converge"
+    ):
+        graph.condensation_levels(chain, max_rounds=5).collect()
 
 
 def _bfs_dists(adj, src, max_hops):

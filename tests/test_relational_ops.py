@@ -259,6 +259,13 @@ def test_kcore_fixed_rounds_matches_fixed_point(spark):
         for r in graph.kcore(edges, k=2, rounds=5).collect()
     )
     assert exact == fixed == [(0, 3), (1, 3), (2, 3), (3, 3)]
+    # the path a-b-c-d peels from both ends, one round per layer: one
+    # round is not enough to reach its (empty) 2-core
+    path = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("c", "d")], "src string, dst string"
+    )
+    with pytest.raises(RuntimeError, match="kcore did not converge"):
+        graph.kcore(path, k=2, max_rounds=1)
 
 
 def test_kcore_contract_rounds_margin(spark):
